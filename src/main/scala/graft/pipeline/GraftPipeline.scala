@@ -38,14 +38,21 @@ final case class GraftPipeline[SV](
   * @param batch     the records this state maps to (None = source had nothing
   *                  new; distinct from an empty DataFrame only in that no
   *                  sink write is attempted)
-  * @param nextState the folded state to commit after the batch lands
+  * @param nextState the folded state to commit after the batch lands. It is
+  *                  by-name and settles on first read, which the runner does
+  *                  only after the sink write has returned, so a source may
+  *                  fold it from what that write observed
+  *                  ([[WindowedSource.tumbling]] does)
   * @param done      true when a bounded pipeline has exhausted its source —
   *                  the run loop stops *without* committing `nextState`'s
   *                  successor (the reference runs forever; bounded runs are
   *                  what tests and batch backfills need)
   */
-final case class Iteration[SV](
-    batch: Option[DataFrame],
-    nextState: SV,
-    done: Boolean = false
-)
+final class Iteration[SV](val batch: Option[DataFrame], next: => SV, val done: Boolean) {
+  lazy val nextState: SV = next
+}
+
+object Iteration {
+  def apply[SV](batch: Option[DataFrame], nextState: => SV, done: Boolean = false): Iteration[SV] =
+    new Iteration(batch, nextState, done)
+}

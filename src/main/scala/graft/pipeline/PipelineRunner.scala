@@ -30,6 +30,13 @@ object StartupDecision {
   * commit-marker is the Spark-native equivalent of the reference's single
   * Kafka transaction around data + state + offset
   * (tamer `Tamer.scala:156-178`); see also `foreachBatch` batchId semantics.
+  *
+  * A source may fold its next state from metrics observed on `df` while the
+  * sink writes it ([[WindowedSource.tumbling]] folds `max(ts)` that way). The
+  * last successful action a sink runs on `df` therefore must read all of its
+  * rows: no `isEmpty`, `head` or `limit` probe after the write. A sink that
+  * only keeps the lazy frame, or skips an epoch it already committed, is
+  * fine: the source then folds from a scan of its own.
   */
 trait BatchSink extends Serializable {
   def write(df: DataFrame, epoch: Long): Unit
@@ -56,7 +63,8 @@ final case class RunResult[SV](
   * commit log instead of a compacted Kafka topic.
   *
   * Per epoch N with state S_N:
-  *   1. `iteration(S_N)` returns the (lazy) batch and the folded `S_{N+1}`;
+  *   1. `iteration(S_N)` returns the (lazy) batch and the folded `S_{N+1}`,
+  *      which is read only after step 2;
   *   2. the sink writes the batch keyed by N (idempotent);
   *   3. `commits/epoch-N` is created atomically (temp file + rename)
   *      containing `S_{N+1}`.

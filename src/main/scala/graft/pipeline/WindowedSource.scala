@@ -2,8 +2,12 @@ package graft.pipeline
 
 import graft.core.Window
 import java.time.{Duration, Instant}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.{Collections, UUID, WeakHashMap}
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.spark.sql.{DataFrame, GraftShims, Row, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Tumbling time-window state machine — the engine's re-expression of the
   * reference's JDBC windowed source fold
@@ -41,6 +45,43 @@ object TumblingWindow {
     }
 }
 
+/** `max(tsCol)` as the sink's write of a window observed it.
+  *
+  * Spark's own `Observation` keeps the metrics of the first execution even
+  * when that execution failed part-way, so behind a retrying sink the fold
+  * would take a partial max and read rows twice; this registry keeps what the
+  * last successful execution observed. Observed metrics reach listeners on
+  * the listener bus after the action has returned, so `take` drains the bus
+  * before it reports a window as never written.
+  */
+private object ObservedMax extends QueryExecutionListener {
+  private val results = new ConcurrentHashMap[String, Option[Row]]()
+  private val sessions = Collections.newSetFromMap(new WeakHashMap[SparkSession, java.lang.Boolean]())
+
+  /** `batch` with `max(tsCol)` observed under a fresh name. */
+  def observe(batch: DataFrame, tsCol: String): (String, DataFrame) = {
+    val spark = batch.sparkSession
+    sessions.synchronized { if (sessions.add(spark)) spark.listenerManager.register(this) }
+    val name = "graft_window_max_" + UUID.randomUUID().toString.replace("-", "")
+    results.put(name, None)
+    (name, batch.observe(name, max(col(tsCol)).as("max_ts")))
+  }
+
+  /** What the last successful execution of `name` observed; None when none
+    * has finished. A window whose sink write threw is never taken, so its
+    * entry stays: one small entry per failed run. */
+  def take(spark: SparkSession, name: String): Option[Row] = {
+    if (results.getOrDefault(name, None).isEmpty) GraftShims.drainListenerBus(spark.sparkContext, 10000L)
+    Option(results.remove(name)).flatten
+  }
+
+  override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+    if (!results.isEmpty)
+      qe.observedMetrics.foreach { case (n, row) => results.computeIfPresent(n, (_, _) => Some(row)) }
+
+  override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+}
+
 /** Incremental windowed pull over any time-stamped relation — the flagship
   * source shape (reference: `DbSetup.tumbling`, its JDBC windowed scan
   * `db/.../DbSetup.scala:35-98`).
@@ -50,10 +91,19 @@ object TumblingWindow {
   * database — and each pull appends the window predicate
   * `ts > from AND ts <= to`. Catalyst pushes that predicate into the scan:
   * for JDBC it is shipped in the generated WHERE clause (the exact behavior
-  * the reference gets by interpolating the window into user SQL), for
-  * parquet it prunes row groups. The iteration's only eager work is a
-  * max-aggregate over the single pruned column — data never flows through
-  * the driver.
+  * the reference gets by interpolating the window into user SQL). For
+  * parquet it prunes row groups only when their footers carry min/max
+  * statistics for `tsCol`, which needs an INT64 `TIMESTAMP_MICROS` or
+  * `TIMESTAMP_MILLIS` column; Spark's default INT96 output has none, so every
+  * pull over such a file scans all of it.
+  *
+  * Every window, empty or not, goes to the sink, and the fold reads the
+  * window's `max(tsCol)` off that write: the rows written and the rows folded
+  * come from one scan, and the iteration runs no job of its own. An empty
+  * window is therefore an empty epoch write. Only when no write of the frame
+  * finished (an exactly-once sink skipping a committed epoch, or a sink that
+  * buffers the lazy frame) does the fold run its own max-aggregate over the
+  * window. Data never flows through the driver.
   */
 object WindowedSource {
 
@@ -77,12 +127,12 @@ object WindowedSource {
       fetchSize: Int = 5000,
       now: () => Instant = () => Instant.now()
   ): GraftPipeline[Window] = {
+    val props = new java.util.Properties()
+    connectionProperties.stringPropertyNames.forEach(k => props.setProperty(k, connectionProperties.getProperty(k)))
+    props.setProperty("fetchsize", fetchSize.toString)
     tumbling(
       name,
-      relation = { spark =>
-        connectionProperties.setProperty("fetchsize", fetchSize.toString)
-        spark.read.jdbc(url, table, connectionProperties)
-      },
+      relation = _.read.jdbc(url, table, props),
       tsCol = tsCol,
       from = from,
       step = step,
@@ -110,16 +160,19 @@ object WindowedSource {
         val batch = relation(spark).filter(
           col(tsCol) > lit(java.sql.Timestamp.from(w.from)) &&
             col(tsCol) <= lit(java.sql.Timestamp.from(w.to)))
-        // One narrow aggregate decides the fold (reference: results.max over
-        // the in-memory chunk, DbSetup.scala:113). Column pruning means this
-        // scan reads only `tsCol`.
-        val maxTsRow = batch.agg(max(col(tsCol))).head()
-        val maxTs =
-          if (maxTsRow.isNullAt(0)) None
-          else Some(maxTsRow.getTimestamp(0).toInstant)
+        // The fold takes max(tsCol) over the rows the sink wrote (reference:
+        // results.max over the chunk it emits, DbSetup.scala:113).
+        val (metric, observed) = ObservedMax.observe(batch, tsCol)
         Iteration(
-          batch = if (maxTs.isDefined) Some(batch) else None,
-          nextState = TumblingWindow.fold(w, maxTs, step, lag, now())
+          batch = Some(observed),
+          nextState = {
+            // no write of the frame finished: a replay skip or a buffering sink
+            val maxTsRow = ObservedMax.take(spark, metric).getOrElse(batch.agg(max(col(tsCol))).head())
+            val maxTs =
+              if (maxTsRow.isNullAt(0)) None
+              else Some(maxTsRow.getTimestamp(0).toInstant)
+            TumblingWindow.fold(w, maxTs, step, lag, now())
+          }
         )
       }
     )

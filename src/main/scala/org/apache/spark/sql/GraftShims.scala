@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Bridge into the `private[sql]` Column<->Expression converters — the
@@ -10,4 +11,13 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object GraftShims {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** Blocks until the listener bus has delivered every event posted so far;
+    * false when `timeoutMillis` passes first. A query's observed metrics
+    * reach `QueryExecutionListener`s through this bus, after the action has
+    * returned.
+    */
+  def drainListenerBus(sc: SparkContext, timeoutMillis: Long): Boolean =
+    try { sc.listenerBus.waitUntilEmpty(timeoutMillis); true }
+    catch { case _: java.util.concurrent.TimeoutException => false }
 }

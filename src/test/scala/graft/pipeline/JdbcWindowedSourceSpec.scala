@@ -57,6 +57,7 @@ class JdbcWindowedSourceSpec extends AnyFunSuite {
     val minTs = bounds.getTimestamp(0).toInstant
     val maxTs = bounds.getTimestamp(1).toInstant
 
+    val props = new java.util.Properties()
     val pipeline = WindowedSource.jdbc(
       name = "derby-users",
       url = url,
@@ -64,6 +65,7 @@ class JdbcWindowedSourceSpec extends AnyFunSuite {
       tsCol = "MODIFIED_AT",
       from = minTs.minusSeconds(1),
       step = Duration.ofMinutes(7), // does not divide 40 min: exercises ragged windows
+      connectionProperties = props,
       now = () => maxTs.plus(Duration.ofDays(1)))
     val sink = new BufferedSink
     val ckpt = Files.createTempDirectory("graft-derby-ckpt").toString
@@ -75,6 +77,7 @@ class JdbcWindowedSourceSpec extends AnyFunSuite {
       .collect().map(_.getInt(0)).sorted.toSeq
     assert(ids == (0 until nRows), "every row exactly once across all pulls")
     assert(sink.batches.size > 1, "the range must take multiple windows")
+    assert(props.isEmpty, s"the caller's connection properties were modified: $props")
   }
 
   test("window predicate is pushed into the JDBC scan (remote WHERE clause)") {
