@@ -4,8 +4,11 @@ import graft.core.Window
 import java.time.{Duration, Instant}
 import java.util.{Collections, UUID, WeakHashMap}
 import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicReference
 import org.apache.spark.sql.{DataFrame, GraftShims, Row, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, FileTable}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -58,18 +61,22 @@ private object ObservedMax extends QueryExecutionListener {
   private val results = new ConcurrentHashMap[String, Option[Row]]()
   private val sessions = Collections.newSetFromMap(new WeakHashMap[SparkSession, java.lang.Boolean]())
 
-  /** `batch` with `max(tsCol)` observed under a fresh name. */
-  def observe(batch: DataFrame, tsCol: String): (String, DataFrame) = {
+  /** `batch` with `max(tsCol)` observed under a fresh name. `last` holds the
+    * name a pipeline observed before; a window whose sink write threw is never
+    * taken, so its entry is dropped here, when the pipeline pulls again. */
+  def observe(batch: DataFrame, tsCol: String, last: AtomicReference[String]): (String, DataFrame) = {
     val spark = batch.sparkSession
     sessions.synchronized { if (sessions.add(spark)) spark.listenerManager.register(this) }
     val name = "graft_window_max_" + UUID.randomUUID().toString.replace("-", "")
     results.put(name, None)
+    Option(last.getAndSet(name)).foreach(results.remove)
     (name, batch.observe(name, max(col(tsCol)).as("max_ts")))
   }
 
+  def isPending(name: String): Boolean = results.containsKey(name)
+
   /** What the last successful execution of `name` observed; None when none
-    * has finished. A window whose sink write threw is never taken, so its
-    * entry stays: one small entry per failed run. */
+    * has finished. */
   def take(spark: SparkSession, name: String): Option[Row] = {
     if (results.getOrDefault(name, None).isEmpty) GraftShims.drainListenerBus(spark.sparkContext, 10000L)
     Option(results.remove(name)).flatten
@@ -104,6 +111,11 @@ private object ObservedMax extends QueryExecutionListener {
   * finished (an exactly-once sink skipping a committed epoch, or a sink that
   * buffers the lazy frame) does the fold run its own max-aggregate over the
   * window. Data never flows through the driver.
+  *
+  * Like the reference's fixed query, `relation` is resolved once per session:
+  * later pulls bind new window bounds into the same DataFrame, so a parquet
+  * relation infers its schema (a Spark job) and a JDBC relation sends its
+  * schema probe once, not once per pull.
   */
 object WindowedSource {
 
@@ -113,7 +125,9 @@ object WindowedSource {
     * predicate is appended to the lazy JDBC relation, so Catalyst ships
     * `tsCol > ? AND tsCol <= ?` inside the generated WHERE clause — exactly
     * the windowed SQL the reference interpolates by hand — and `fetchsize`
-    * maps the reference's `fetchChunkSize` (`db/.../config.scala:27`).
+    * maps the reference's `fetchChunkSize` (`db/.../config.scala:27`). The
+    * relation is resolved once per session (see [[tumbling]]), so the
+    * table's schema probe runs once, not once per pull.
     */
   def jdbc(
       name: String,
@@ -141,6 +155,20 @@ object WindowedSource {
       relationRepr = s"jdbc:$url:$table")
   }
 
+  /** A tumbling-window pipeline over `relation`, starting at the window
+    * `(from, from + step]`.
+    *
+    * @param relation    the source table. It is called on the first pull of a
+    *                    session and the DataFrame it returns is reused for
+    *                    every later pull in that session; before each reuse
+    *                    the file listing of every file-based relation in its
+    *                    plan is refreshed, so files that land between pulls
+    *                    are read. The schema is fixed at the first pull: to
+    *                    pick up a schema change, start a new session or
+    *                    pipeline.
+    * @param relationRepr stands for `relation` in the pipeline's `repr`, and
+    *                    so in its checkpoint identity
+    */
   def tumbling(
       name: String,
       relation: SparkSession => DataFrame,
@@ -152,17 +180,23 @@ object WindowedSource {
       relationRepr: String = ""
   ): GraftPipeline[Window] = {
     val repr = s"windowed:$relationRepr:$tsCol:step=${step.toMillis}ms:lag=${lag.toMillis}ms"
+    val resolved = new AtomicReference[(SparkSession, DataFrame)]()
+    val lastMetric = new AtomicReference[String]()
     GraftPipeline[Window](
       name,
       initialState = Window(from, from.plus(step)),
       repr = repr,
       iteration = (spark, w) => {
-        val batch = relation(spark).filter(
+        val rel = resolved.get match {
+          case (s, df) if s eq spark => refreshListings(df); df
+          case _ => val df = relation(spark); resolved.set((spark, df)); df
+        }
+        val batch = rel.filter(
           col(tsCol) > lit(java.sql.Timestamp.from(w.from)) &&
             col(tsCol) <= lit(java.sql.Timestamp.from(w.to)))
         // The fold takes max(tsCol) over the rows the sink wrote (reference:
         // results.max over the chunk it emits, DbSetup.scala:113).
-        val (metric, observed) = ObservedMax.observe(batch, tsCol)
+        val (metric, observed) = ObservedMax.observe(batch, tsCol, lastMetric)
         Iteration(
           batch = Some(observed),
           nextState = {
@@ -177,4 +211,17 @@ object WindowedSource {
       }
     )
   }
+
+  /** Re-lists every file-based relation in `df`'s plan, so files that landed
+    * since the previous pull are read. Each file index clears only its own
+    * entries of the session's file status cache. */
+  private def refreshListings(df: DataFrame): Unit =
+    df.queryExecution.analyzed.collectWithSubqueries {
+      case l: LogicalRelation => l.relation
+      case r: DataSourceV2Relation => r.table
+    }.foreach {
+      case fs: HadoopFsRelation => fs.location.refresh()
+      case t: FileTable => t.fileIndex.refresh()
+      case _ => ()
+    }
 }

@@ -4,6 +4,7 @@ import graft.TestSpark
 import java.nio.file.Files
 import java.time.{Duration, Instant}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.RowDataSourceScanExec
 import org.scalatest.funsuite.AnyFunSuite
 import scala.collection.mutable.ArrayBuffer
 
@@ -78,6 +79,37 @@ class JdbcWindowedSourceSpec extends AnyFunSuite {
     assert(ids == (0 until nRows), "every row exactly once across all pulls")
     assert(sink.batches.size > 1, "the range must take multiple windows")
     assert(props.isEmpty, s"the caller's connection properties were modified: $props")
+  }
+
+  test("the reused JDBC relation pushes every window's bounds into its scan, not just the first") {
+    setupDb()
+    val from = base.toInstant.minusSeconds(1)
+    val source = WindowedSource.jdbc(
+      name = "derby-users-pushdown",
+      url = url,
+      table = "USERS",
+      tsCol = "MODIFIED_AT",
+      from = from,
+      step = Duration.ofMinutes(7),
+      now = () => from.plus(Duration.ofDays(1)))
+    val windows = ArrayBuffer.empty[graft.core.Window]
+    val pipeline = source.copy(iteration = (s: org.apache.spark.sql.SparkSession, w: graft.core.Window) => {
+      windows += w
+      source.iteration(s, w)
+    })(source.codec, source.hashable)
+    val sink = new BufferedSink
+    new PipelineRunner(spark, Files.createTempDirectory("graft-derby-pushdown").toString)
+      .run(pipeline, sink, maxIterations = 4)
+    assert(sink.batches.size == 4)
+    sink.batches.zip(windows).foreach { case (batch, w) =>
+      val pushed = batch.queryExecution.executedPlan
+        .collectFirst { case s: RowDataSourceScanExec => s.metadata("PushedFilters") }
+        .getOrElse(fail(s"no JDBC scan in the plan of window $w"))
+      val bounds = Seq(
+        s"GreaterThan(MODIFIED_AT,${java.sql.Timestamp.from(w.from)})",
+        s"LessThanOrEqual(MODIFIED_AT,${java.sql.Timestamp.from(w.to)})")
+      assert(bounds.forall(pushed.contains), s"window $w must reach the JDBC scan: $pushed")
+    }
   }
 
   test("window predicate is pushed into the JDBC scan (remote WHERE clause)") {

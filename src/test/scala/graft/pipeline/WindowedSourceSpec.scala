@@ -7,7 +7,9 @@ import java.nio.file.{Files, Paths}
 import java.time.{Duration, Instant}
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, GraftShims, Row}
+import org.apache.spark.sql.{DataFrame, GraftShims, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.CollectMetrics
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -33,15 +35,26 @@ class WindowedSourceSpec extends AnyFunSuite {
   /** The source table as one parquet file (one scan partition). */
   private def source(): String = {
     val dir = Files.createTempDirectory("graft-windowed-src").resolve("events").toString
-    val rows = times.zipWithIndex.map { case (t, i) => Row(i.toLong, java.sql.Timestamp.from(t), s"payload-$i") }
-    spark.createDataFrame(rows.asJava, schema).coalesce(1).write.parquet(dir)
+    addFile(dir, times, 0)
     dir
   }
 
-  private def pipeline(dir: String, now: Instant, lag: Duration = Duration.ZERO): GraftPipeline[Window] =
+  /** Appends one parquet file with rows at `ts`, ids from `firstId`. */
+  private def addFile(dir: String, ts: Seq[Instant], firstId: Int): Unit = {
+    val rows = ts.zipWithIndex.map { case (t, i) =>
+      Row((firstId + i).toLong, java.sql.Timestamp.from(t), s"payload-${firstId + i}")
+    }
+    spark.createDataFrame(rows.asJava, schema).coalesce(1).write.mode("append").parquet(dir)
+  }
+
+  private def pipeline(
+      dir: String,
+      now: Instant,
+      lag: Duration = Duration.ZERO,
+      relation: SparkSession => DataFrame = null): GraftPipeline[Window] =
     WindowedSource.tumbling(
       "windowed-spec",
-      relation = _.read.schema(schema).parquet(dir),
+      relation = Option(relation).getOrElse(_.read.schema(schema).parquet(dir)),
       tsCol = "ts",
       from = t0,
       step = step,
@@ -50,11 +63,31 @@ class WindowedSourceSpec extends AnyFunSuite {
       relationRepr = dir)
 
   /** The windows the runner must commit: the fold over each window's true max. */
-  private def expected(n: Int, now: Instant, lag: Duration): Seq[Window] =
+  private def expected(n: Int, now: Instant, lag: Duration, data: Seq[Instant] = times): Seq[Window] =
     Iterator.iterate(Window(t0, t0.plus(step))) { w =>
-      val maxTs = times.filter(t => t.isAfter(w.from) && !t.isAfter(w.to)).maxOption
+      val maxTs = data.filter(t => t.isAfter(w.from) && !t.isAfter(w.to)).maxOption
       TumblingWindow.fold(w, maxTs, step, lag, now)
     }.slice(1, n + 1).toSeq
+
+  /** Counts the Spark jobs `body` starts on this thread. */
+  private def countJobs(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = "windowed-jobs-" + java.util.UUID.randomUUID()
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("graft.spec.tag") == tag) jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.spec.tag", tag)
+    try body
+    finally {
+      sc.setLocalProperty("graft.spec.tag", null)
+      assert(GraftShims.drainListenerBus(sc, 10000L))
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
+  }
 
   private def committed(ckpt: String, p: GraftPipeline[Window]): Seq[Window] = {
     val dir = Paths.get(ckpt, s"${p.name}-${p.stateKey}", "commits")
@@ -134,24 +167,10 @@ class WindowedSourceSpec extends AnyFunSuite {
     val sinkDir = tmp("graft-windowed-jobs-sink")
     val epochs = 14
 
-    val sc = spark.sparkContext
-    val tag = "windowed-jobs-" + java.util.UUID.randomUUID()
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("graft.spec.tag") == tag) jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty("graft.spec.tag", tag)
     // this sink returns as soon as its write does, before the listener bus
     // has delivered the write's observed metrics
-    try new PipelineRunner(spark, ckpt).run(p, new EpochParquetSink(sinkDir), maxIterations = epochs)
-    finally {
-      sc.setLocalProperty("graft.spec.tag", null)
-      assert(GraftShims.drainListenerBus(sc, 10000L))
-      sc.removeSparkListener(listener)
-    }
-    assert(jobs.get == epochs, s"$epochs epochs ran ${jobs.get} Spark jobs")
+    val jobs = countJobs(new PipelineRunner(spark, ckpt).run(p, new EpochParquetSink(sinkDir), maxIterations = epochs))
+    assert(jobs == epochs, s"$epochs epochs ran $jobs Spark jobs")
 
     val windows = committed(ckpt, p)
     assert(windows == expected(epochs, now, lag))
@@ -188,5 +207,99 @@ class WindowedSourceSpec extends AnyFunSuite {
     val windows = committed(ckpt, p)
     assert(windows == expected(windows.size, lastTs.plus(Duration.ofDays(1)), Duration.ZERO))
     assert(fingerprint(sinkRows(sinkDir)) == fingerprint(spark.read.parquet(dir)))
+  }
+
+  /** An inferred-schema parquet directory that grows while `session` pulls
+    * from it: the sink holds every row exactly once and the committed windows
+    * fold the final table. Returns the directory. */
+  private def growingSource(session: SparkSession): String = {
+    val dir = Files.createTempDirectory("graft-windowed-grow").resolve("events").toString
+    // three vintages of the table: the first is there at the start, the
+    // second lands after epoch 1 of the first run, the third between runs
+    val (first, rest) = times.partition(_.isBefore(t0.plus(Duration.ofMinutes(31))))
+    val (second, third) = rest.partition(_.isBefore(t0.plus(Duration.ofMinutes(81))))
+    addFile(dir, first, 0)
+    val lastTs = times.max
+    val now = lastTs.plus(Duration.ofDays(1))
+    val p = pipeline(dir, now, relation = _.read.parquet(dir))
+    val ckpt = tmp("graft-windowed-grow-ckpt")
+    val sinkDir = tmp("graft-windowed-grow-sink")
+    val writer = new ExactlyOnceParquetWriter(sinkDir)
+    val grow = new BatchSink {
+      def write(df: DataFrame, epoch: Long): Unit = {
+        writer.write(df, epoch)
+        if (epoch == 1) addFile(dir, second, first.size)
+      }
+    }
+    val firstRun = new PipelineRunner(session, ckpt).run(p, grow, maxIterations = 6)
+    assert(firstRun.epochsRun == 6)
+    assert(firstRun.finalState.to.isBefore(third.min), "the third file must land ahead of the window")
+    assert(firstRun.finalState.from.isAfter(first.max), "the first run read the second file")
+
+    addFile(dir, third, first.size + second.size)
+    new PipelineRunner(session, ckpt).run(p, writer, maxIterations = 64, stopWhen = (w: Window) => !w.from.isBefore(lastTs))
+
+    val windows = committed(ckpt, p)
+    assert(windows == expected(windows.size, now, Duration.ZERO))
+    assert(windows.last.from == lastTs)
+    val want = fingerprint(spark.read.parquet(dir))
+    assert(want._1 == times.size)
+    assert(fingerprint(sinkRows(sinkDir)) == want)
+    dir
+  }
+
+  test("a growing inferred-schema parquet directory: files added between epochs and between runs are read once") {
+    growingSource(spark)
+  }
+
+  test("a growing parquet directory read through the DSv2 file source is refreshed the same way") {
+    val v2 = spark.newSession()
+    v2.conf.set("spark.sql.sources.useV1SourceList", "")
+    val dir = growingSource(v2)
+    assert(v2.read.parquet(dir).queryExecution.analyzed.collectFirst { case r: DataSourceV2Relation => r }.nonEmpty)
+  }
+
+  test("the relation resolves once per session; later inferred-schema epochs are one Spark job each") {
+    val dir = source()
+    val resolves = new AtomicInteger()
+    val now = times.max.plus(Duration.ofDays(1))
+    val p = pipeline(dir, now, relation = s => { resolves.incrementAndGet(); s.read.parquet(dir) })
+    val ckpt = tmp("graft-windowed-resolve")
+    val sinkDir = tmp("graft-windowed-resolve-sink")
+
+    new PipelineRunner(spark, ckpt).run(p, new EpochParquetSink(sinkDir), maxIterations = 1)
+    assert(resolves.get == 1)
+    // a fresh runner on the same pipeline reuses the resolved relation: no
+    // schema inference, only the sink write
+    val epochs = 9
+    val jobs = countJobs(new PipelineRunner(spark, ckpt).run(p, new EpochParquetSink(sinkDir), maxIterations = epochs))
+    assert(jobs == epochs, s"$epochs epochs ran $jobs Spark jobs")
+    assert(resolves.get == 1)
+
+    new PipelineRunner(spark.newSession(), ckpt).run(p, new EpochParquetSink(sinkDir), maxIterations = 3)
+    assert(resolves.get == 2)
+    assert(committed(ckpt, p) == expected(1 + epochs + 3, now, Duration.ZERO))
+  }
+
+  test("a window whose sink threw is no longer pending once the pipeline pulls again") {
+    val dir = source()
+    val lastTs = times.max
+    val p = pipeline(dir, now = lastTs.plus(Duration.ofDays(1)))
+    val ckpt = tmp("graft-windowed-pending")
+    var failed: Option[String] = None
+    val failing = new BatchSink {
+      def write(df: DataFrame, epoch: Long): Unit =
+        if (epoch == 2) {
+          failed = df.queryExecution.logical.collectFirst { case c: CollectMetrics => c.name }
+          throw new IllegalStateException("injected sink failure")
+        }
+    }
+    intercept[IllegalStateException](new PipelineRunner(spark, ckpt).run(p, failing, maxIterations = 64))
+    val name = failed.getOrElse(fail("the sink saw no observed window"))
+    assert(ObservedMax.isPending(name))
+
+    new PipelineRunner(spark, ckpt).run(p, new EpochParquetSink(tmp("graft-windowed-pending-sink")),
+      maxIterations = 64, stopWhen = (w: Window) => !w.from.isBefore(lastTs))
+    assert(!ObservedMax.isPending(name))
   }
 }
