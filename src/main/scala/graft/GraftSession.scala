@@ -15,6 +15,16 @@ import org.apache.spark.sql.SparkSession
   *  - shuffle partitions default to the local core count here; on a real
   *    cluster this should be ~2-3x total executor cores — AQE coalesces
   *    down so erring high is safe.
+  *  - `fs.file.impl` is [[graft.core.LocalFileSystem]]. Without the native
+  *    `libhadoop`, Hadoop's local filesystem forks a `chmod` process (about
+  *    3 ms) for every file and directory it creates: 13 per pipeline epoch,
+  *    2 per runner start. graft's class sets the same permissions in process, and
+  *    its create-without-overwrite is exclusive, which the pipeline runner's
+  *    lock needs. Hadoop caches one `file:` FileSystem per JVM and user,
+  *    built from the conf of the first lookup. A deployment that builds its
+  *    own session must therefore set
+  *    `spark.hadoop.fs.file.impl=graft.core.LocalFileSystem` before anything
+  *    in the JVM creates a `file:` FileSystem.
   */
 object GraftSession {
   def builder(appName: String, master: Option[String] = None): SparkSession.Builder = {
@@ -64,6 +74,8 @@ object GraftSession {
       // every session this factory builds — same hook a deployment sets via
       // --conf spark.sql.extensions=graft.GraftExtensions
       .config("spark.sql.extensions", "graft.GraftExtensions")
+      // in-process chmod and exclusive create for `file:` paths (see above)
+      .config("spark.hadoop.fs.file.impl", classOf[graft.core.LocalFileSystem].getName)
     master.orElse(sys.env.get("SPARK_GRAFT_MASTER").orElse(Some(s"local[$cpus]")))
       .foldLeft(b)(_ master _)
   }

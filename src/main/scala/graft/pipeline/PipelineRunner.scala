@@ -72,9 +72,17 @@ final case class RunResult[SV](
   * sink is idempotent per epoch, downstream observes each record exactly
   * once — the same guarantee the reference gets from its Kafka transaction.
   *
-  * The commit log lives on whatever Hadoop filesystem the path points at
-  * (local FS in tests, HDFS/S3A on a cluster), and only ever holds the
-  * encoded state — bytes proportional to the cursor, never to the data.
+  * The commit log lives on whatever Hadoop filesystem the path points at,
+  * and only ever holds the encoded state — bytes proportional to the
+  * cursor, never to the data. The guarantee needs two things of that
+  * filesystem: an atomic rename (step 3) and an exclusive
+  * create-without-overwrite (the single-writer lock). HDFS has both, and so
+  * does the local filesystem of a [[graft.GraftSession]]
+  * ([[graft.core.LocalFileSystem]]; Hadoop's own local `create` is not
+  * exclusive). S3A has neither: a
+  * rename there is a copy and then a delete, and create-without-overwrite
+  * checks for the object that only appears when the writer closes it, so
+  * two runners can both take the lock and interleave commits.
   */
 final class PipelineRunner(spark: SparkSession, checkpointRoot: String) {
 
@@ -139,9 +147,9 @@ final class PipelineRunner(spark: SparkSession, checkpointRoot: String) {
 
   /** Single-writer fencing — the role the reference's `transactional.id`
     * plays (tamer `Tamer.scala:365`: a second producer with the same id
-    * fences the first). Acquisition is an atomic create-without-overwrite of
-    * a lock file; a pipeline whose lock is already held refuses to run
-    * rather than interleave commits.
+    * fences the first). Acquisition is an exclusive create-without-overwrite
+    * of a lock file (see the filesystem contract above); a pipeline whose
+    * lock is already held refuses to run rather than interleave commits.
     */
   private def lockPath[SV](p: GraftPipeline[SV]): Path =
     new Path(s"$checkpointRoot/${p.name}-${p.stateKey}/_lock")
@@ -151,7 +159,7 @@ final class PipelineRunner(spark: SparkSession, checkpointRoot: String) {
     val filesystem = fs(lock)
     if (!filesystem.exists(lock.getParent)) filesystem.mkdirs(lock.getParent)
     val out =
-      try filesystem.create(lock, false) // overwrite=false: atomic acquire
+      try filesystem.create(lock, false) // overwrite=false: exclusive acquire
       catch {
         case _: java.io.IOException =>
           throw GraftError(

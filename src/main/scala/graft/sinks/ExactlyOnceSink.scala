@@ -18,6 +18,12 @@ import org.apache.spark.sql.DataFrame
   *   3. the commit marker is created by atomic rename, so a marker implies
   *      complete data.
   *
+  * Spark's commit of `batch=N` and step 3 both rename into place, which is
+  * atomic on HDFS and on the local filesystem. On S3A a rename is a copy and
+  * then a delete, file by file: a crash inside Spark's job commit leaves
+  * part of `batch=N` visible without a marker. A replay overwrites it, but a
+  * reader that lists `batch=*` without checking markers sees it.
+  *
   * Usage: `df.writeStream.foreachBatch(writer.write _).start()` — or as the
   * [[graft.pipeline.BatchSink]] of a [[graft.pipeline.PipelineRunner]].
   */

@@ -3,9 +3,12 @@ package graft.pipeline
 import graft.TestSpark
 import graft.core.GraftError
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{Callable, CountDownLatch, CyclicBarrier, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import scala.collection.mutable
+import scala.util.{Failure, Try}
 
 /** Port of the reference's core state-machine liveness test (tamer
   * `core/src/test/scala/tamer/TamerSpec.scala:30-68`): an iteration that
@@ -119,6 +122,45 @@ class PipelineRunnerSpec extends AnyFunSuite {
     val res = new PipelineRunner(spark, ckpt).run(p, new CollectSink)
     assert(res.visited == (1 to 10))
     assert(!Files.exists(lock))
+  }
+
+  test("two runners racing on one checkpoint: exactly one runs, the other is refused") {
+    implicit val h: graft.core.Hashable[Int] = graft.core.Hashable.intHashable
+    val pool = Executors.newFixedThreadPool(2)
+    try for (trial <- 1 to 20) {
+      val ckpt = freshDir()
+      // a runner that took the lock waits in its first epoch until the
+      // other runner was refused or has entered an epoch too
+      val entered, refused = new AtomicInteger
+      val release = new CountDownLatch(1)
+      val p = GraftPipeline[Int](
+        name = "racer",
+        initialState = 0,
+        repr = "racer",
+        iteration = (_, state) => {
+          entered.incrementAndGet()
+          release.await(30, TimeUnit.SECONDS)
+          Iteration(batch = None, nextState = state + 1, done = true)
+        })
+      val barrier = new CyclicBarrier(2)
+      val runs = (1 to 2).map(_ => pool.submit(new Callable[Try[RunResult[Int]]] {
+        def call(): Try[RunResult[Int]] = {
+          barrier.await()
+          val r = Try(new PipelineRunner(spark, ckpt).run(p, new CollectSink))
+          if (r.isFailure) refused.incrementAndGet()
+          r
+        }
+      }))
+      val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(30)
+      while (entered.get + refused.get < 2 && System.nanoTime() < deadline) Thread.sleep(1)
+      release.countDown()
+      val results = runs.map(_.get(60, TimeUnit.SECONDS))
+      assert(results.count(_.isSuccess) == 1, s"trial $trial: ${results.count(_.isSuccess)} runners ran")
+      results.collectFirst { case Failure(e) => e }.foreach { e =>
+        assert(e.isInstanceOf[GraftError] && e.getMessage.contains("already running"), s"trial $trial: $e")
+      }
+    }
+    finally pool.shutdownNow()
   }
 
   test("stateKey is stable for the same definition and differs across definitions") {
