@@ -41,8 +41,10 @@ import java.nio.file.{Files, Paths}
   * warehouse.
   *
   * Output: one JSON line on stdout AND the same JSON written to
-  * `$SPARK_GRAFT_BENCH_OUT` (default `bench_out.json` in the CWD) so the
-  * driver can parse it without scraping sbt log tails.
+  * `$SPARK_GRAFT_BENCH_OUT` (default `bench_out_c<N>.json` in the CWD,
+  * `N` the session's core count, with a copy in the legacy
+  * `bench_out.json`) so a harness can parse it without scraping sbt log
+  * tails.
   */
 object Bench {
   private val WindowSize = 16
@@ -157,7 +159,7 @@ object Bench {
     // breaks. Additions only — the one-line full-JSON contract
     // (metric/value/unit/queries/sf) and every existing field are
     // unchanged.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = coreCount(spark.sparkContext.master)
     val outExplicit = sys.env.get("SPARK_GRAFT_BENCH_OUT")
     val out = outExplicit.getOrElse(s"bench_out_c$cpus.json")
     // Mechanical cross-round adjudication (r16 verdict #6): the §8.0
@@ -166,15 +168,19 @@ object Bench {
     // per-cpu path, read BEFORE this run overwrites it, or
     // SPARK_GRAFT_BENCH_PREV) supplies the shared-query baseline — same
     // core count, so the ratio compares like with like — and ITS load
-    // averages; the
+    // averages; when the per-cpu file is missing, the legacy
+    // `bench_out.json` serves if it records the same core count. The
     // verdict classifies the shared-median movement against the measured
     // load delta: <= 1.10x is in-band (the §8.0 swing window), above that
     // a >= 1.25x mean-load increase points at the box, else at the code.
-    val prevPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_PREV", out)
-    val prev = parsePrev(prevPath)
+    val prev = sys.env.get("SPARK_GRAFT_BENCH_PREV") match {
+      case Some(p) => parsePrev(p)
+      case None => parsePrev(out).orElse(
+        if (outExplicit.isEmpty) parsePrev("bench_out.json").filter(_._4.contains(cpus)) else None)
+    }
     val (ratioJson, sharedN, verdict) = prev match {
       case None => ("null", 0, "no-prev")
-      case Some((pq, pl0, pl1)) =>
+      case Some((pq, pl0, pl1, _)) =>
         val ratios = results.collect {
           case (n, v) if v > 0 && pq.get(n).exists(_ > 0) => v / pq(n)
         }.sorted
@@ -195,7 +201,7 @@ object Bench {
     val adjudication =
       s""""shared_median_ratio":$ratioJson,"shared_n":$sharedN,"load_verdict":${jstr(verdict)}"""
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","protocol":"$protocol","loadavg":$load,$adjudication,"queries":$qs,"slowest_samples":$slowSamples,"sf":${jstr(sfDir)}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","protocol":"$protocol","cpus":$cpus,"loadavg":$load,$adjudication,"queries":$qs,"slowest_samples":$slowSamples,"sf":${jstr(sfDir)}}"""
     Files.writeString(Paths.get(out), json + "\n")
     // legacy location kept alongside the per-cpu default (only for
     // default-path runs: an explicit SPARK_GRAFT_BENCH_OUT — probe runs —
@@ -216,11 +222,23 @@ object Bench {
     spark.stop()
   }
 
+  /** Core count of the resolved master: `N` of `local[N]` (or
+    * `local[N, retries]`), the machine's processors for `local[*]`, else
+    * `SPARK_GRAFT_CPUS`. `SPARK_GRAFT_MASTER` overrides `SPARK_GRAFT_CPUS`
+    * in GraftSession, so the env variable alone can mislabel a run. */
+  private[graft] def coreCount(master: String): String =
+    """local\[(\d+|\*)""".r.findPrefixMatchOf(master).map(_.group(1)) match {
+      case Some("*") => Runtime.getRuntime.availableProcessors.toString
+      case Some(n) => n
+      case None => sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    }
+
   /** Minimal parse of a previous bench_out.json (our own known shape — no
-    * JSON lib on the classpath): the per-query seconds map and the run's
-    * load averages. Any malformed/missing file degrades to None (the
-    * adjudication then reports "no-prev", never fails the bench). */
-  private def parsePrev(path: String): Option[(Map[String, Double], Double, Double)] =
+    * JSON lib on the classpath): the per-query seconds map, the run's
+    * load averages and its core count (absent before the field existed).
+    * Any malformed/missing file degrades to None (the adjudication then
+    * reports "no-prev", never fails the bench). */
+  private[graft] def parsePrev(path: String): Option[(Map[String, Double], Double, Double, Option[String])] =
     try {
       if (!Files.exists(Paths.get(path))) None
       else {
@@ -231,7 +249,8 @@ object Bench {
           pair.findAllMatchIn(b).map(m => m.group(1) -> m.group(2).toDouble).toMap)
         val la = """"loadavg":\{"start":([0-9.eE+-]+),"end":([0-9.eE+-]+)\}""".r
           .findFirstMatchIn(s)
-        for (q <- qs; l <- la) yield (q, l.group(1).toDouble, l.group(2).toDouble)
+        val cpus = """"cpus":([0-9]+)""".r.findFirstMatchIn(s).map(_.group(1))
+        for (q <- qs; l <- la) yield (q, l.group(1).toDouble, l.group(2).toDouble, cpus)
       }
     } catch { case scala.util.control.NonFatal(_) => None }
 }

@@ -1,12 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftShims}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.types.StringType
 
 /** CONTENT-DEFINED CHUNKING (CDC — the Rabin/gear-style variable-size
   * chunking behind storage dedup and near-identical-document detection):
@@ -112,36 +107,12 @@ object CdcKernel {
   }
 }
 
-/** string → array<long> of flattened 1-based (start, len) CDC chunk
-  * spans. */
-case class CdcChunkSpansExpr(child: Expression, window: Int, maskBits: Int)
-  extends UnaryExpression {
-  require(window >= 2 && window <= 16, s"window out of [2,16]: $window")
-  require(maskBits >= 1 && maskBits <= 20, s"maskBits out of [1,20]: $maskBits")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_cdc_chunks requires a string argument, got ${t.sql}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_cdc_chunks"
-
-  override def nullSafeEval(s: Any): Any =
-    ArrayData.toArrayData(CdcKernel.chunkSpans(
-      s.asInstanceOf[UTF8String].toString, window, maskBits))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"""${ev.value} = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
-         |  graft.functions.CdcKernel.chunkSpans($s.toString(), $window, $maskBits));""".stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object CdcExpressions {
   /** Flattened 1-based (start, len) CDC chunk spans of a text column. */
-  def cdcChunkSpans(text: Column, window: Int, maskBits: Int): Column =
-    GraftShims.column(CdcChunkSpansExpr(GraftShims.expression(text), window, maskBits))
+  def cdcChunkSpans(text: Column, window: Int, maskBits: Int): Column = {
+    require(window >= 2 && window <= 16, s"window out of [2,16]: $window")
+    require(maskBits >= 1 && maskBits <= 20, s"maskBits out of [1,20]: $maskBits")
+    KernelCall.column("graft_cdc_chunks", CdcKernel, "chunkSpans", KernelCall.LongArray,
+      Seq(text -> StringType), window, maskBits)
+  }
 }

@@ -1,11 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftShims}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType}
+import graft.functions.LittleEndian.{le16, le32, writeLe32}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.types.BinaryType
 
 /** Gzip (RFC 1952) member kernel — the COMPRESSED-CORPUS ingestion leg:
   * unlike the JPEG/MP3/Opus legs, the JDK ships the FULL codec
@@ -38,9 +35,7 @@ object GzipKernel {
     val out = new java.io.ByteArrayOutputStream()
     val flg = if (fname != null) 0x08 else 0x00
     out.write(0x1f); out.write(0x8b); out.write(8); out.write(flg)
-    var m = mtime
-    var j = 0
-    while (j < 4) { out.write((m & 0xff).toInt); m >>>= 8; j += 1 }
+    writeLe32(out, mtime)
     out.write(xfl); out.write(os)
     if (fname != null) {
       fname.getBytes("ISO-8859-1").foreach(b => out.write(b & 0xff))
@@ -59,18 +54,10 @@ object GzipKernel {
     } finally deflater.end()
     val crc = new java.util.zip.CRC32()
     crc.update(payload)
-    var c = crc.getValue
-    j = 0
-    while (j < 4) { out.write((c & 0xff).toInt); c >>>= 8; j += 1 }
-    var isize = payload.length.toLong & 0xffffffffL
-    j = 0
-    while (j < 4) { out.write((isize & 0xff).toInt); isize >>>= 8; j += 1 }
+    writeLe32(out, crc.getValue)
+    writeLe32(out, payload.length.toLong) // ISIZE: length mod 2^32
     out.toByteArray
   }
-
-  private def le32(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-      ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
 
   /** `[is_gzip, mtime, xfl, os, has_name, isize, crc_ok, n_decoded]`
     * (longs) — is_gzip = 1 iff the magic/CM parse and the raw-deflate
@@ -95,7 +82,7 @@ object GzipKernel {
     try {
       if ((flg & 0x04) != 0) { // FEXTRA
         if (i + 2 > bytes.length) return fail
-        i += 2 + ((bytes(i) & 0xff) | ((bytes(i + 1) & 0xff) << 8))
+        i += 2 + le16(bytes, i)
       }
       if ((flg & 0x08) != 0) { // FNAME
         while (bytes(i) != 0) i += 1
@@ -135,35 +122,10 @@ object GzipKernel {
   }
 }
 
-/** Fused gzip member audit: binary → array<long> `[is_gzip, mtime, xfl,
-  * os, has_name, isize, crc_ok, n_decoded]` — one REAL inflate per row
-  * inside WholeStageCodegen, zero shuffle, no driver round-trip: the
-  * format-verification scan of a compressed crawl shard. */
-case class GzipInfoExpr(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_gzip_info requires a binary argument, got ${t.sql}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_gzip_info"
-
-  override def nullSafeEval(b: Any): Any =
-    new GenericArrayData(GzipKernel.info(b.asInstanceOf[Array[Byte]]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"""${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  graft.functions.GzipKernel.info($b));""".stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object GzipExpressions {
   /** array<long> [is_gzip, mtime, xfl, os, has_name, isize, crc_ok,
     * n_decoded] of a binary column. */
   def gzipInfo(bin: Column): Column =
-    GraftShims.column(GzipInfoExpr(GraftShims.expression(bin)))
+    KernelCall.column("graft_gzip_info", GzipKernel, "info", KernelCall.LongArray,
+      Seq(bin -> BinaryType))
 }

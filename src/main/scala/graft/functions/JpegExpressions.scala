@@ -1,11 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftShims}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.types.{ArrayType, BinaryType, IntegerType}
 
 /** JPEG container-header kernel — the format-verification half of the
   * JPEG leg (the r15 verdict's "dims/flags are oracle-expressible even
@@ -60,34 +56,9 @@ object JpegKernel {
   }
 }
 
-/** Fused JPEG header parse: binary → array<int> `[is_jpeg, width,
-  * height]`. One kernel call per row inside WholeStageCodegen — the
-  * zero-shuffle per-row projection shape (stream-safe, embarrassingly
-  * parallel at 100 TB). */
-case class JpegDimsExpr(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_jpeg_dims requires a binary argument, got ${t.sql}")
-  }
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "graft_jpeg_dims"
-
-  override def nullSafeEval(b: Any): Any =
-    new GenericArrayData(JpegKernel.dims(b.asInstanceOf[Array[Byte]]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"""${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  graft.functions.JpegKernel.dims($b));""".stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object JpegExpressions {
   /** array<int> [is_jpeg, width, height] of a binary column. */
   def jpegDims(bin: Column): Column =
-    GraftShims.column(JpegDimsExpr(GraftShims.expression(bin)))
+    KernelCall.column("graft_jpeg_dims", JpegKernel, "dims",
+      ArrayType(IntegerType, containsNull = false), Seq(bin -> BinaryType))
 }

@@ -1,11 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftShims}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.types.BinaryType
 
 /** MPEG audio (MP3) container-header kernel — the audio sibling of
   * [[JpegKernel]] and the same gate split: the JDK ships NO MP3 decoder
@@ -123,36 +119,10 @@ object Mp3Kernel {
   }
 }
 
-/** Fused MP3 container parse: binary → array<long> `[is_mp3, version,
-  * sample_rate, bitrate_kbps, channels, n_frames, duration_ms]`. One
-  * kernel call per row inside WholeStageCodegen — the zero-shuffle
-  * per-row projection shape (stream-safe, embarrassingly parallel at
-  * 100 TB). */
-case class Mp3InfoExpr(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_mp3_info requires a binary argument, got ${t.sql}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_mp3_info"
-
-  override def nullSafeEval(b: Any): Any =
-    new GenericArrayData(Mp3Kernel.info(b.asInstanceOf[Array[Byte]]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"""${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  graft.functions.Mp3Kernel.info($b));""".stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object Mp3Expressions {
   /** array<long> [is_mp3, version, sample_rate, bitrate_kbps, channels,
     * n_frames, duration_ms] of a binary column. */
   def mp3Info(bin: Column): Column =
-    GraftShims.column(Mp3InfoExpr(GraftShims.expression(bin)))
+    KernelCall.column("graft_mp3_info", Mp3Kernel, "info", KernelCall.LongArray,
+      Seq(bin -> BinaryType))
 }

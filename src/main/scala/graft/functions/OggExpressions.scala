@@ -1,11 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftShims}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType}
+import graft.functions.LittleEndian.{le16, le32, le64}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.types.BinaryType
 
 /** Ogg (RFC 3533) page-walk kernel with Opus (RFC 7845) header
   * detection — the container half of the Opus leg, same gate split as
@@ -65,17 +62,6 @@ object OggKernel {
       i += 1
     }
     crc
-  }
-
-  private def le16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def le32(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-      ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-  private def le64(b: Array[Byte], i: Int): Long = {
-    var v = 0L; var j = 7
-    while (j >= 0) { v = (v << 8) | (b(i + j) & 0xffL); j -= 1 }
-    v
   }
 
   /** `[is_ogg, is_opus, channels, pre_skip, n_pages, last_granule,
@@ -148,35 +134,10 @@ object OggKernel {
   }
 }
 
-/** Fused Ogg/Opus container parse: binary → array<long> `[is_ogg,
-  * is_opus, channels, pre_skip, n_pages, last_granule, duration_ms]`.
-  * One kernel call per row inside WholeStageCodegen — zero shuffle,
-  * stream-safe, embarrassingly parallel at 100 TB. */
-case class OggInfoExpr(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_ogg_info requires a binary argument, got ${t.sql}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_ogg_info"
-
-  override def nullSafeEval(b: Any): Any =
-    new GenericArrayData(OggKernel.info(b.asInstanceOf[Array[Byte]]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"""${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  graft.functions.OggKernel.info($b));""".stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object OggExpressions {
   /** array<long> [is_ogg, is_opus, channels, pre_skip, n_pages,
     * last_granule, duration_ms] of a binary column. */
   def oggInfo(bin: Column): Column =
-    GraftShims.column(OggInfoExpr(GraftShims.expression(bin)))
+    KernelCall.column("graft_ogg_info", OggKernel, "info", KernelCall.LongArray,
+      Seq(bin -> BinaryType))
 }

@@ -1,11 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftShims}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType}
+import graft.functions.LittleEndian.{le32, writeLe32, writeLe64}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.types.BinaryType
 
 /** Parquet footer kernel (Apache Parquet file format: `PAR1` magic at
   * both ends, data pages, then a thrift-compact `FileMetaData` footer
@@ -170,16 +167,6 @@ object ParquetFooterKernel {
 
   // --- synthesis ----------------------------------------------------------
 
-  private def le32(out: java.io.ByteArrayOutputStream, v: Long): Unit = {
-    out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-    out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-  }
-
-  private def le64(out: java.io.ByteArrayOutputStream, v: Long): Unit = {
-    var k = 0
-    while (k < 8) { out.write(((v >> (8 * k)) & 0xff).toInt); k += 1 }
-  }
-
   /** One REAL single-column (required INT64 `v`, PLAIN, uncompressed)
     * parquet file: `rowsPerGroup(g)` rows in row group `g`, values
     * `base + running row index`. Each chunk is one data page v1 (no
@@ -221,7 +208,7 @@ object ParquetFooterKernel {
       }
       out.write(phb, 0, phb.length)
       var r = 0
-      while (r < rows) { le64(out, value); value += 1; r += 1 }
+      while (r < rows) { writeLe64(out, value); value += 1; r += 1 }
       chunkBytes(g) = phb.length.toLong + 8L * rows
     }
     val footerAt = out.size.toLong
@@ -269,16 +256,12 @@ object ParquetFooterKernel {
       t.toByteArray
     }
     out.write(fm, 0, fm.length)
-    le32(out, out.size.toLong - footerAt)
+    writeLe32(out, out.size.toLong - footerAt)
     out.write("PAR1".getBytes("US-ASCII"))
     out.toByteArray
   }
 
   // --- audit --------------------------------------------------------------
-
-  private def rl32(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-      ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
 
   /** `[is_parquet, n_row_groups, n_columns, n_rows, n_chunks,
     * data_bytes, tiling_ok]` (longs). Structural breaks (magic, footer
@@ -296,7 +279,7 @@ object ParquetFooterKernel {
     def magicAt(i: Int): Boolean =
       bytes(i) == 'P' && bytes(i + 1) == 'A' && bytes(i + 2) == 'R' && bytes(i + 3) == '1'
     if (!magicAt(0) || !magicAt(n - 4)) return fail
-    val flen = rl32(bytes, n - 8)
+    val flen = le32(bytes, n - 8)
     if (flen <= 0 || flen > n - 12) return fail
     val footerAt = n - 8 - flen.toInt
     try {
@@ -417,36 +400,10 @@ object ParquetFooterKernel {
   }
 }
 
-/** Fused parquet footer audit: binary → array<long> `[is_parquet,
-  * n_row_groups, n_columns, n_rows, n_chunks, data_bytes, tiling_ok]` —
-  * one magic + thrift-compact footer walk per row inside
-  * WholeStageCodegen, zero shuffle, data pages never read: the
-  * manifest-speed integrity scan of the lake's own storage format. */
-case class ParquetFooterInfoExpr(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_parquet_footer_info requires a binary argument, got ${t.sql}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_parquet_footer_info"
-
-  override def nullSafeEval(b: Any): Any =
-    new GenericArrayData(ParquetFooterKernel.info(b.asInstanceOf[Array[Byte]]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"""${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  graft.functions.ParquetFooterKernel.info($b));""".stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object ParquetFooterExpressions {
   /** array<long> [is_parquet, n_row_groups, n_columns, n_rows, n_chunks,
     * data_bytes, tiling_ok] of a binary column holding a parquet file. */
   def parquetFooterInfo(bin: Column): Column =
-    GraftShims.column(ParquetFooterInfoExpr(GraftShims.expression(bin)))
+    KernelCall.column("graft_parquet_footer_info", ParquetFooterKernel, "info", KernelCall.LongArray,
+      Seq(bin -> BinaryType))
 }

@@ -1,14 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftShims}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.types.{ArrayType, BinaryType, LongType}
 
-/** Single-pass PCM16LE kernels shared by the interpreted and generated
-  * paths of [[PcmStatsExpr]] / [[SynthPcm16Expr]] — the byte loops behind
+/** Single-pass PCM16LE kernels called by [[PcmExpressions.pcmStats]] /
+  * [[PcmExpressions.synthPcm16]] and the other PCM columns — the byte loops behind
   * [[graft.operators.Multimodal.audioFeatures]] / `synthPcm16`. A
   * higher-order-function formulation of the same math evaluates its
   * lambdas interpretively PER SAMPLE (Spark's array HOFs do not
@@ -223,7 +219,7 @@ object PcmKernel {
   }
 
   /** s16le bytes of the closed-form pseudo-signal
-    * `((id·31 + k·7) mod 65536) − 32768` — the [[SynthPcm16Expr]] body;
+    * `((id·31 + k·7) mod 65536) − 32768` — the [[PcmExpressions.synthPcm16]] body;
     * bit-identical to the format_string/unhex formulation it replaces. */
   def synth(id: Long, nSamples: Int): Array[Byte] = {
     val out = new Array[Byte](nSamples * 2)
@@ -237,85 +233,6 @@ object PcmKernel {
     }
     out
   }
-}
-
-/** Fused per-row PCM16LE statistics: binary → array of 6 longs
-  * (n_samples, sum_sq, peak, zero_crossings, n_frames, active_frames).
-  * One kernel call per row inside WholeStageCodegen. */
-case class PcmStatsExpr(child: Expression, frameSamples: Int, energyThreshold: Long)
-  extends UnaryExpression {
-  require(frameSamples >= 1, s"frameSamples must be >= 1, got $frameSamples")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_pcm_stats requires a binary argument, got ${t.sql}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_pcm_stats"
-
-  override def nullSafeEval(b: Any): Any =
-    ArrayData.toArrayData(
-      PcmKernel.stats(b.asInstanceOf[Array[Byte]], frameSamples, energyThreshold))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"""${ev.value} = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
-         |  graft.functions.PcmKernel.stats($b, $frameSamples, ${energyThreshold}L));""".stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Deterministic s16le synthesis: long id → PCM bytes. */
-case class SynthPcm16Expr(child: Expression, nSamples: Int) extends UnaryExpression {
-  require(nSamples >= 1, s"nSamples must be >= 1, got $nSamples")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_synth_pcm16 requires a bigint argument, got ${t.sql}")
-  }
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_synth_pcm16"
-
-  override def nullSafeEval(id: Any): Any =
-    PcmKernel.synth(id.asInstanceOf[Long], nSamples)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = graft.functions.PcmKernel.synth($id, $nSamples);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Deterministic integer-ratio linear sample-rate conversion: s16le
-  * binary → s16le binary at `toRate`. One fused kernel call per row
-  * inside WholeStageCodegen — the zero-shuffle per-row projection shape
-  * (stream-safe, embarrassingly parallel at 100 TB). */
-case class ResamplePcm16Expr(child: Expression, fromRate: Int, toRate: Int)
-  extends UnaryExpression {
-  require(fromRate >= 1 && toRate >= 1,
-    s"rates must be positive, got $fromRate -> $toRate")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_resample_pcm16 requires a binary argument, got ${t.sql}")
-  }
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_resample_pcm16"
-
-  override def nullSafeEval(b: Any): Any =
-    PcmKernel.resample(b.asInstanceOf[Array[Byte]], fromRate, toRate)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"${ev.value} = graft.functions.PcmKernel.resample($b, $fromRate, $toRate);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** G.711 µ-law → PCM16LE transcode: one byte per sample in, two bytes
@@ -453,99 +370,6 @@ object AlawKernel {
   }
 }
 
-/** PCM16LE binary → µ-law binary (the encode/write path), one fused
-  * kernel call per row. */
-case class MulawFromPcm16Expr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_pcm16_to_mulaw requires a binary argument, got ${t.sql}")
-  }
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_pcm16_to_mulaw"
-  override def nullSafeEval(b: Any): Any =
-    MulawKernel.fromPcm16(b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"${ev.value} = graft.functions.MulawKernel.fromPcm16($b);")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** PCM16LE binary → A-law binary (the encode/write path), one fused
-  * kernel call per row. */
-case class AlawFromPcm16Expr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_pcm16_to_alaw requires a binary argument, got ${t.sql}")
-  }
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_pcm16_to_alaw"
-  override def nullSafeEval(b: Any): Any =
-    AlawKernel.fromPcm16(b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"${ev.value} = graft.functions.AlawKernel.fromPcm16($b);")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** A-law binary → PCM16LE binary, one fused kernel call per row. */
-case class AlawToPcm16Expr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_alaw_to_pcm16 requires a binary argument, got ${t.sql}")
-  }
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_alaw_to_pcm16"
-  override def nullSafeEval(b: Any): Any =
-    AlawKernel.toPcm16(b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"${ev.value} = graft.functions.AlawKernel.toPcm16($b);")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** µ-law binary → PCM16LE binary, one fused kernel call per row. */
-case class MulawToPcm16Expr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_mulaw_to_pcm16 requires a binary argument, got ${t.sql}")
-  }
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_mulaw_to_pcm16"
-  override def nullSafeEval(b: Any): Any =
-    MulawKernel.toPcm16(b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"${ev.value} = graft.functions.MulawKernel.toPcm16($b);")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Deterministic µ-law synthesis: long id → n µ-law bytes. */
-case class SynthMulawExpr(child: Expression, nSamples: Int) extends UnaryExpression {
-  require(nSamples >= 1, s"nSamples must be >= 1, got $nSamples")
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_synth_mulaw requires a bigint argument, got ${t.sql}")
-  }
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_synth_mulaw"
-  override def nullSafeEval(id: Any): Any =
-    MulawKernel.synth(id.asInstanceOf[Long], nSamples)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = graft.functions.MulawKernel.synth($id, $nSamples);")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 /** Byte-stream frame splitting on a magic signature — the container
   * step of a frame pipeline (concatenated PNG/JPEG streams, MJPEG-style
   * captures): scan for every occurrence of the marker, emit one frame
@@ -573,188 +397,87 @@ object FrameSplitKernel {
   }
 }
 
-/** binary → array<binary> of frames split on `magic`. */
-case class SplitByMagicExpr(child: Expression, magic: Seq[Byte]) extends UnaryExpression {
-  require(magic.nonEmpty, "magic must be non-empty")
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_split_frames requires a binary argument, got ${t.sql}")
-  }
-  override def dataType: DataType = ArrayType(BinaryType, containsNull = false)
-  override def prettyName: String = "graft_split_frames"
-
-  @transient private lazy val magicArr: Array[Byte] = magic.toArray
-
-  override def nullSafeEval(b: Any): Any =
-    ArrayData.toArrayData(
-      FrameSplitKernel.split(b.asInstanceOf[Array[Byte]], magicArr)
-        .asInstanceOf[Array[Any]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val magicRef = ctx.addReferenceObj("magicBytes", magicArr, "byte[]")
-    nullSafeCodeGen(ctx, ev, b =>
-      s"""${ev.value} = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
-         |  (Object[]) graft.functions.FrameSplitKernel.split($b, $magicRef));""".stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Fused peak normalization: binary → binary rescaled so max|s| =
-  * targetPeak ([[PcmKernel.gainNormalize]] — exact floor-div integer
-  * scaling; all-zero streams pass through). */
-case class GainNormalizeExpr(child: Expression, targetPeak: Int) extends UnaryExpression {
-  require(targetPeak >= 1 && targetPeak <= 32767,
-    s"targetPeak out of [1, 32767]: $targetPeak")
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_pcm16_gain requires a binary argument, got ${t.sql}")
-  }
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_pcm16_gain"
-
-  override def nullSafeEval(b: Any): Any =
-    PcmKernel.gainNormalize(b.asInstanceOf[Array[Byte]], targetPeak)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"${ev.value} = graft.functions.PcmKernel.gainNormalize($b, $targetPeak);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Fused stereo→mono downmix: binary → binary
-  * ([[PcmKernel.stereoDownmix]] — floorDiv average per pair). */
-case class StereoDownmixExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_stereo_downmix requires a binary argument, got ${t.sql}")
-  }
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_stereo_downmix"
-  override def nullSafeEval(b: Any): Any =
-    PcmKernel.stereoDownmix(b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"${ev.value} = graft.functions.PcmKernel.stereoDownmix($b);")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Fused channel extraction from interleaved stereo: binary → binary
-  * ([[PcmKernel.deinterleave]]). */
-case class DeinterleaveExpr(child: Expression, channel: Int) extends UnaryExpression {
-  require(channel == 0 || channel == 1, s"channel must be 0 or 1, got $channel")
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_deinterleave requires a binary argument, got ${t.sql}")
-  }
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_deinterleave"
-  override def nullSafeEval(b: Any): Any =
-    PcmKernel.deinterleave(b.asInstanceOf[Array[Byte]], channel)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"${ev.value} = graft.functions.PcmKernel.deinterleave($b, $channel);")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Fused energy-VAD segmentation: binary → array<long> of flattened
-  * (start_frame, span_frames) speech segments — [[PcmKernel.vadSegments]]
-  * as one kernel call per row inside WholeStageCodegen. */
-case class VadSegmentsExpr(
-    child: Expression, frameSamples: Int, energyThreshold: Long,
-    maxGapFrames: Int, minSpanFrames: Int) extends UnaryExpression {
-  require(frameSamples >= 1, s"frameSamples must be >= 1, got $frameSamples")
-  require(maxGapFrames >= 0, s"maxGapFrames must be >= 0, got $maxGapFrames")
-  require(minSpanFrames >= 1, s"minSpanFrames must be >= 1, got $minSpanFrames")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_vad_segments requires a binary argument, got ${t.sql}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_vad_segments"
-
-  override def nullSafeEval(b: Any): Any =
-    ArrayData.toArrayData(PcmKernel.vadSegments(
-      b.asInstanceOf[Array[Byte]], frameSamples, energyThreshold,
-      maxGapFrames, minSpanFrames))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"""${ev.value} = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
-         |  graft.functions.PcmKernel.vadSegments(
-         |    $b, $frameSamples, ${energyThreshold}L, $maxGapFrames, $minSpanFrames));""".stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object PcmExpressions {
+  private def bytesIn(name: String, kernel: AnyRef, method: String, bin: Column,
+      params: Any*): Column =
+    KernelCall.column(name, kernel, method, BinaryType, Seq(bin -> BinaryType), params: _*)
+
+  private def synth(name: String, kernel: AnyRef, id: Column, nSamples: Int): Column = {
+    require(nSamples >= 1, s"nSamples must be >= 1, got $nSamples")
+    KernelCall.column(name, kernel, "synth", BinaryType, Seq(id -> LongType), nSamples)
+  }
+
   /** Frames split on a magic byte signature: binary → array<binary>. */
-  def splitFrames(bin: Column, magic: Array[Byte]): Column =
-    GraftShims.column(SplitByMagicExpr(GraftShims.expression(bin), magic.toSeq))
+  def splitFrames(bin: Column, magic: Array[Byte]): Column = {
+    require(magic.nonEmpty, "magic must be non-empty")
+    KernelCall.column("graft_split_frames", FrameSplitKernel, "split",
+      ArrayType(BinaryType, containsNull = false), Seq(bin -> BinaryType), magic.clone())
+  }
 
   /** µ-law bytes → s16le bytes. */
   def mulawToPcm16(bin: Column): Column =
-    GraftShims.column(MulawToPcm16Expr(GraftShims.expression(bin)))
+    bytesIn("graft_mulaw_to_pcm16", MulawKernel, "toPcm16", bin)
 
   /** A-law bytes → s16le bytes. */
   def alawToPcm16(bin: Column): Column =
-    GraftShims.column(AlawToPcm16Expr(GraftShims.expression(bin)))
+    bytesIn("graft_alaw_to_pcm16", AlawKernel, "toPcm16", bin)
 
   /** s16le bytes → µ-law bytes (the encode/write path). */
   def pcm16ToMulaw(bin: Column): Column =
-    GraftShims.column(MulawFromPcm16Expr(GraftShims.expression(bin)))
+    bytesIn("graft_pcm16_to_mulaw", MulawKernel, "fromPcm16", bin)
 
   /** s16le bytes → A-law bytes (the encode/write path). */
   def pcm16ToAlaw(bin: Column): Column =
-    GraftShims.column(AlawFromPcm16Expr(GraftShims.expression(bin)))
+    bytesIn("graft_pcm16_to_alaw", AlawKernel, "fromPcm16", bin)
 
   /** Synth µ-law bytes from a long id column. */
   def synthMulaw(id: Column, nSamples: Int): Column =
-    GraftShims.column(SynthMulawExpr(GraftShims.expression(id), nSamples))
+    synth("graft_synth_mulaw", MulawKernel, id, nSamples)
 
   /** Fused PCM stats column: array<long> of
     * (n_samples, sum_sq, peak, zero_crossings, n_frames, active_frames). */
-  def pcmStats(bin: Column, frameSamples: Int, energyThreshold: Long): Column =
-    GraftShims.column(PcmStatsExpr(GraftShims.expression(bin), frameSamples, energyThreshold))
+  def pcmStats(bin: Column, frameSamples: Int, energyThreshold: Long): Column = {
+    require(frameSamples >= 1, s"frameSamples must be >= 1, got $frameSamples")
+    KernelCall.column("graft_pcm_stats", PcmKernel, "stats", KernelCall.LongArray,
+      Seq(bin -> BinaryType), frameSamples, energyThreshold)
+  }
 
   /** Synth s16le bytes from a long id column. */
   def synthPcm16(id: Column, nSamples: Int): Column =
-    GraftShims.column(SynthPcm16Expr(GraftShims.expression(id), nSamples))
+    synth("graft_synth_pcm16", PcmKernel, id, nSamples)
 
   /** Integer-ratio linear resample of s16le bytes (e.g. 8000 → 16000). */
-  def resamplePcm16(bin: Column, fromRate: Int, toRate: Int): Column =
-    GraftShims.column(ResamplePcm16Expr(GraftShims.expression(bin), fromRate, toRate))
+  def resamplePcm16(bin: Column, fromRate: Int, toRate: Int): Column = {
+    require(fromRate >= 1 && toRate >= 1, s"rates must be positive, got $fromRate -> $toRate")
+    bytesIn("graft_resample_pcm16", PcmKernel, "resample", bin, fromRate, toRate)
+  }
 
   /** Interleaved-stereo s16le → mono (floorDiv pair average). */
   def stereoDownmix(bin: Column): Column =
-    GraftShims.column(StereoDownmixExpr(GraftShims.expression(bin)))
+    bytesIn("graft_stereo_downmix", PcmKernel, "stereoDownmix", bin)
 
   /** One channel (0 = left, 1 = right) of interleaved-stereo s16le. */
-  def deinterleave(bin: Column, channel: Int): Column =
-    GraftShims.column(DeinterleaveExpr(GraftShims.expression(bin), channel))
+  def deinterleave(bin: Column, channel: Int): Column = {
+    require(channel == 0 || channel == 1, s"channel must be 0 or 1, got $channel")
+    bytesIn("graft_deinterleave", PcmKernel, "deinterleave", bin, channel)
+  }
 
   /** Peak-normalize s16le bytes so max|s| = targetPeak (exact floor-div
     * scaling; all-zero streams pass through). */
-  def gainNormalize(bin: Column, targetPeak: Int): Column =
-    GraftShims.column(GainNormalizeExpr(GraftShims.expression(bin), targetPeak))
+  def gainNormalize(bin: Column, targetPeak: Int): Column = {
+    require(targetPeak >= 1 && targetPeak <= 32767, s"targetPeak out of [1, 32767]: $targetPeak")
+    bytesIn("graft_pcm16_gain", PcmKernel, "gainNormalize", bin, targetPeak)
+  }
 
   /** Energy-VAD speech segments: binary → array<long> of flattened
     * (start_frame, span_frames) pairs. */
   def vadSegments(
       bin: Column, frameSamples: Int, energyThreshold: Long,
-      maxGapFrames: Int, minSpanFrames: Int): Column =
-    GraftShims.column(VadSegmentsExpr(GraftShims.expression(bin),
-      frameSamples, energyThreshold, maxGapFrames, minSpanFrames))
+      maxGapFrames: Int, minSpanFrames: Int): Column = {
+    require(frameSamples >= 1, s"frameSamples must be >= 1, got $frameSamples")
+    require(maxGapFrames >= 0, s"maxGapFrames must be >= 0, got $maxGapFrames")
+    require(minSpanFrames >= 1, s"minSpanFrames must be >= 1, got $minSpanFrames")
+    KernelCall.column("graft_vad_segments", PcmKernel, "vadSegments", KernelCall.LongArray,
+      Seq(bin -> BinaryType), frameSamples, energyThreshold, maxGapFrames, minSpanFrames)
+  }
 }

@@ -1,11 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftShims}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.types.BinaryType
 
 /** Protobuf wire-format kernel (the published proto3 encoding) — the
   * PAYLOAD layer under the q347 TFRecord walk: a TFRecord shard's
@@ -94,35 +90,10 @@ object ProtoKernel {
   }
 }
 
-/** Fused proto wire audit: binary → array<long> `[is_proto, n_fields,
-  * n_varint, n_len, varint_sum, len_total]` — one self-delimiting wire
-  * walk per row inside WholeStageCodegen, zero shuffle: the schema-free
-  * integrity scan of a serialized-message corpus. */
-case class ProtoInfoExpr(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_proto_info requires a binary argument, got ${t.sql}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_proto_info"
-
-  override def nullSafeEval(b: Any): Any =
-    new GenericArrayData(ProtoKernel.info(b.asInstanceOf[Array[Byte]]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"""${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  graft.functions.ProtoKernel.info($b));""".stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object ProtoExpressions {
   /** array<long> [is_proto, n_fields, n_varint, n_len, varint_sum,
     * len_total] of a binary column holding one wire-format message. */
   def protoInfo(bin: Column): Column =
-    GraftShims.column(ProtoInfoExpr(GraftShims.expression(bin)))
+    KernelCall.column("graft_proto_info", ProtoKernel, "info", KernelCall.LongArray,
+      Seq(bin -> BinaryType))
 }

@@ -1,12 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftShims}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.types.StringType
 
 /** robots.txt kernel (RFC 9309, the Robots Exclusion Protocol) — the
   * POLITENESS decision a crawl frontier makes before every fetch, and
@@ -112,46 +107,16 @@ object RobotsKernel {
     Array(if (bestAllow) 1L else 0L, delay)
   }
 
-  def evalRow(robots: UTF8String, agent: String, path: UTF8String): GenericArrayData =
-    new GenericArrayData(eval(
-      if (robots == null) null else robots.toString, agent,
-      if (path == null) null else path.toString))
-}
-
-/** Fused robots decision: (robots text, path) → array<long>
-  * [allowed, crawl_delay] for a fixed product token — one parse +
-  * longest-match resolution per row inside WholeStageCodegen, zero
-  * shuffle: the per-URL politeness gate of a crawl frontier. */
-case class RobotsAllowExpr(left: Expression, right: Expression, agent: String)
-  extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"graft_robots_allow requires (string, string), got (${l.sql}, ${r.sql})")
-    }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_robots_allow"
-
-  override def nullSafeEval(r: Any, p: Any): Any =
-    RobotsKernel.evalRow(r.asInstanceOf[UTF8String], agent, p.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val agentRef = ctx.addReferenceObj("agent", agent, "java.lang.String")
-    nullSafeCodeGen(ctx, ev, (r, p) =>
-      s"""${ev.value} = graft.functions.RobotsKernel.evalRow($r, $agentRef, $p);""")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
+  /** [[eval]] with the product token last, the order the column call
+    * passes it in. */
+  def allow(robots: String, path: String, agent: String): Array[Long] =
+    eval(robots, agent, path)
 }
 
 object RobotsExpressions {
   /** array<long> [allowed, crawl_delay] of (robots text, path) for the
     * given product token. */
   def robotsAllow(robots: Column, path: Column, agent: String): Column =
-    GraftShims.column(RobotsAllowExpr(
-      GraftShims.expression(robots), GraftShims.expression(path), agent))
+    KernelCall.column("graft_robots_allow", RobotsKernel, "allow", KernelCall.LongArray,
+      Seq(robots -> StringType, path -> StringType), agent)
 }

@@ -1,11 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftShims}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType}
+import graft.functions.LittleEndian.le64
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.types.BinaryType
 
 /** safetensors header kernel (the published huggingface format: a u64 LE
   * header length, a JSON header mapping tensor names to
@@ -94,12 +91,6 @@ object SafetensorsKernel {
   }
   private object Bad extends Exception { override def fillInStackTrace(): Throwable = this }
 
-  private def le64(b: Array[Byte], i: Int): Long = {
-    var v = 0L; var k = 7
-    while (k >= 0) { v = (v << 8) | (b(i + k) & 0xffL); k -= 1 }
-    v
-  }
-
   /** `[is_safetensors, n_tensors, data_bytes, n_f32, n_f16, max_rank,
     * has_metadata]` (longs) — header-proportional validation: any JSON
     * malformation, unknown dtype, span ≠ shape × dtype_size, or a data
@@ -110,7 +101,7 @@ object SafetensorsKernel {
     val fail = Array(0L, -1L, -1L, -1L, -1L, -1L, -1L)
     if (bytes == null || bytes.length < 9) return fail
     val hlen = le64(bytes, 0)
-    if (hlen <= 0 || 8L + hlen > bytes.length) return fail
+    if (hlen <= 0 || hlen > bytes.length - 8L) return fail // no `8 + hlen` wrap
     val dataLen = bytes.length.toLong - 8L - hlen
     val header = new String(bytes, 8, hlen.toInt, "UTF-8")
     try {
@@ -194,36 +185,10 @@ object SafetensorsKernel {
   }
 }
 
-/** Fused safetensors header audit: binary → array<long>
-  * `[is_safetensors, n_tensors, data_bytes, n_f32, n_f16, max_rank,
-  * has_metadata]` — one JSON-header parse + offset-tiling verification
-  * per row inside WholeStageCodegen, zero shuffle, data bytes never
-  * read: the manifest scan of a checkpoint/embedding-artifact corpus. */
-case class SafetensorsInfoExpr(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_safetensors_info requires a binary argument, got ${t.sql}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_safetensors_info"
-
-  override def nullSafeEval(b: Any): Any =
-    new GenericArrayData(SafetensorsKernel.info(b.asInstanceOf[Array[Byte]]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"""${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  graft.functions.SafetensorsKernel.info($b));""".stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object SafetensorsExpressions {
   /** array<long> [is_safetensors, n_tensors, data_bytes, n_f32, n_f16,
     * max_rank, has_metadata] of a binary column. */
   def safetensorsInfo(bin: Column): Column =
-    GraftShims.column(SafetensorsInfoExpr(GraftShims.expression(bin)))
+    KernelCall.column("graft_safetensors_info", SafetensorsKernel, "info", KernelCall.LongArray,
+      Seq(bin -> BinaryType))
 }

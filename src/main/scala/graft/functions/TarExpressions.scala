@@ -1,11 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftShims}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.types.BinaryType
 
 /** POSIX ustar shard kernel (IEEE 1003.1) — the TRAINING-SHARD leg: the
   * WebDataset convention (the de facto multimodal-training container —
@@ -144,36 +140,10 @@ object TarKernel {
   }
 }
 
-/** Fused ustar shard audit: binary → array<long> `[is_tar, n_entries,
-  * n_keys, total_size, n_txt, n_bin, n_chksum_bad]` — one
-  * checksum-verifying header walk per row inside WholeStageCodegen,
-  * zero shuffle: the manifest scan of a WebDataset training-shard
-  * corpus. */
-case class TarInfoExpr(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_tar_info requires a binary argument, got ${t.sql}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_tar_info"
-
-  override def nullSafeEval(b: Any): Any =
-    new GenericArrayData(TarKernel.info(b.asInstanceOf[Array[Byte]]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"""${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  graft.functions.TarKernel.info($b));""".stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object TarExpressions {
   /** array<long> [is_tar, n_entries, n_keys, total_size, n_txt, n_bin,
     * n_chksum_bad] of a binary column holding a ustar shard. */
   def tarInfo(bin: Column): Column =
-    GraftShims.column(TarInfoExpr(GraftShims.expression(bin)))
+    KernelCall.column("graft_tar_info", TarKernel, "info", KernelCall.LongArray,
+      Seq(bin -> BinaryType))
 }

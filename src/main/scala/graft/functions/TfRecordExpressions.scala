@@ -1,11 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftShims}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType}
+import graft.functions.LittleEndian.{le32, le64, writeLe32, writeLe64}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.types.BinaryType
 
 /** TFRecord shard kernel (the TensorFlow `tf.data` on-disk record
   * format) — with the ustar/WebDataset leg (q339) this covers both
@@ -36,32 +33,17 @@ object TfRecordKernel {
     (rot + 0xa282ead8L) & 0xffffffffL
   }
 
-  private def le32(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-      ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-
-  private def le64(b: Array[Byte], i: Int): Long = {
-    var v = 0L; var k = 7
-    while (k >= 0) { v = (v << 8) | (b(i + k) & 0xffL); k -= 1 }
-    v
-  }
-
-  private def wle32(out: java.io.ByteArrayOutputStream, v: Long): Unit = {
-    out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-    out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-  }
-
   /** One shard over the payloads — real masked CRC32C framing. */
   def tfrecord(payloads: Seq[Array[Byte]]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     payloads.foreach { p =>
-      val lenB = new Array[Byte](8)
-      var v = p.length.toLong; var k = 0
-      while (k < 8) { lenB(k) = (v & 0xff).toByte; v >>= 8; k += 1 }
+      val len = new java.io.ByteArrayOutputStream(8)
+      writeLe64(len, p.length.toLong)
+      val lenB = len.toByteArray
       out.write(lenB)
-      wle32(out, maskedCrc(lenB, 0, 8))
+      writeLe32(out, maskedCrc(lenB, 0, 8))
       out.write(p)
-      wle32(out, maskedCrc(p, 0, p.length))
+      writeLe32(out, maskedCrc(p, 0, p.length))
     }
     out.toByteArray
   }
@@ -93,35 +75,10 @@ object TfRecordKernel {
   }
 }
 
-/** Fused TFRecord shard audit: binary → array<long> `[is_tfrecord,
-  * n_records, total_bytes, n_crc_bad]` — one masked-CRC32C framing walk
-  * per row inside WholeStageCodegen, zero shuffle: the manifest scan of
-  * a tf.data training-shard corpus. */
-case class TfRecordInfoExpr(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_tfrecord_info requires a binary argument, got ${t.sql}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_tfrecord_info"
-
-  override def nullSafeEval(b: Any): Any =
-    new GenericArrayData(TfRecordKernel.info(b.asInstanceOf[Array[Byte]]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"""${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  graft.functions.TfRecordKernel.info($b));""".stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object TfRecordExpressions {
   /** array<long> [is_tfrecord, n_records, total_bytes, n_crc_bad] of a
     * binary column holding a TFRecord shard. */
   def tfrecordInfo(bin: Column): Column =
-    GraftShims.column(TfRecordInfoExpr(GraftShims.expression(bin)))
+    KernelCall.column("graft_tfrecord_info", TfRecordKernel, "info", KernelCall.LongArray,
+      Seq(bin -> BinaryType))
 }

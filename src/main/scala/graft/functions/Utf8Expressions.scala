@@ -1,11 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftShims}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.types.BinaryType
 
 /** Charset sniff + STRICT UTF-8 validation kernel — the encoding step a
   * crawl pipeline runs before any text operator sees a byte: real crawl
@@ -80,36 +76,11 @@ object Utf8Kernel {
   }
 }
 
-/** Fused charset sniff + strict UTF-8 audit: binary → array<long>
-  * `[encoding, n_chars, n_invalid, n_multibyte, has_bom]` — one pass per
-  * row inside WholeStageCodegen, zero shuffle: the encoding gate that
-  * fronts every text operator in a crawl pipeline. */
-case class Utf8InfoExpr(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_utf8_info requires a binary argument, got ${t.sql}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_utf8_info"
-
-  override def nullSafeEval(b: Any): Any =
-    new GenericArrayData(Utf8Kernel.info(b.asInstanceOf[Array[Byte]]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"""${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  graft.functions.Utf8Kernel.info($b));""".stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object Utf8Expressions {
   /** array<long> [encoding, n_chars, n_invalid, n_multibyte, has_bom]
     * of a binary column (encoding 1 = UTF-8, 2 = UTF-16LE, 3 =
     * UTF-16BE). */
   def utf8Info(bin: Column): Column =
-    GraftShims.column(Utf8InfoExpr(GraftShims.expression(bin)))
+    KernelCall.column("graft_utf8_info", Utf8Kernel, "info", KernelCall.LongArray,
+      Seq(bin -> BinaryType))
 }

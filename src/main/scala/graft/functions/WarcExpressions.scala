@@ -1,11 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftShims}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType}
+import graft.functions.LittleEndian.{le16, le32}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.types.{BinaryType, StringType}
 
 /** WARC shard kernel (ISO 28500 / WARC 1.0) — the CRAWL-INGESTION leg:
   * web-archive shards (the Common Crawl distribution format, the de facto
@@ -138,10 +135,6 @@ object WarcKernel {
     Array(1L, isResp, isReq, isMeta, httpOk, contentLength)
   }
 
-  private def le32(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-      ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-
   /** `[is_warc, n_members, n_records, n_response, n_request, n_metadata,
     * n_http_ok, content_total, n_crc_bad]` (longs) — one pass over the
     * concatenated members. is_warc = 1 iff the walk consumes the WHOLE
@@ -170,7 +163,7 @@ object WarcKernel {
         var i = pos + 10
         if ((flg & 0x04) != 0) { // FEXTRA
           if (i + 2 > bytes.length) return fail
-          i += 2 + ((bytes(i) & 0xff) | ((bytes(i + 1) & 0xff) << 8))
+          i += 2 + le16(bytes, i)
         }
         if ((flg & 0x08) != 0) { while (bytes(i) != 0) i += 1; i += 1 } // FNAME
         if ((flg & 0x10) != 0) { while (bytes(i) != 0) i += 1; i += 1 } // FCOMMENT
@@ -238,7 +231,7 @@ object WarcKernel {
         var i = pos + 10
         if ((flg & 0x04) != 0) {
           if (i + 2 > bytes.length) return null
-          i += 2 + ((bytes(i) & 0xff) | ((bytes(i + 1) & 0xff) << 8))
+          i += 2 + le16(bytes, i)
         }
         if ((flg & 0x08) != 0) { while (bytes(i) != 0) i += 1; i += 1 }
         if ((flg & 0x10) != 0) { while (bytes(i) != 0) i += 1; i += 1 }
@@ -331,75 +324,17 @@ object WarcKernel {
   }
 }
 
-/** Fused WARC shard audit: binary → array<long> `[is_warc, n_members,
-  * n_records, n_response, n_request, n_metadata, n_http_ok,
-  * content_total, n_crc_bad]` — per row: a full member walk with one REAL
-  * inflate + trailer verification per member and a WARC record parse per
-  * inflated member, inside WholeStageCodegen, zero shuffle: the
-  * shard-manifest scan that fronts a crawl-scale ingestion DAG. */
-case class WarcInfoExpr(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_warc_info requires a binary argument, got ${t.sql}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_warc_info"
-
-  override def nullSafeEval(b: Any): Any =
-    new GenericArrayData(WarcKernel.info(b.asInstanceOf[Array[Byte]]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"""${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  graft.functions.WarcKernel.info($b));""".stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Fused WARC payload extraction: binary → string — the HTTP body of the
-  * first 2xx-status `response` record (null when none; chunked bodies
-  * de-chunked): the
-  * shard-to-document step of crawl ingestion, one early-exiting member
-  * walk per row inside WholeStageCodegen, zero shuffle. */
-case class WarcBodyExpr(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_warc_body requires a binary argument, got ${t.sql}")
-  }
-  override def dataType: DataType = org.apache.spark.sql.types.StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_warc_body"
-
-  override def nullSafeEval(b: Any): Any = {
-    val s = WarcKernel.firstOkHtmlBody(b.asInstanceOf[Array[Byte]])
-    if (s == null) null else org.apache.spark.unsafe.types.UTF8String.fromString(s)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"""java.lang.String ${ev.value}Str = graft.functions.WarcKernel.firstOkHtmlBody($b);
-         |${ev.isNull} = ${ev.value}Str == null;
-         |${ev.value} = ${ev.isNull} ? null
-         |  : org.apache.spark.unsafe.types.UTF8String.fromString(${ev.value}Str);""".stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object WarcExpressions {
   /** array<long> [is_warc, n_members, n_records, n_response, n_request,
     * n_metadata, n_http_ok, content_total, n_crc_bad] of a binary
     * column holding a record-at-time-gzipped WARC shard. */
   def warcInfo(bin: Column): Column =
-    GraftShims.column(WarcInfoExpr(GraftShims.expression(bin)))
+    KernelCall.column("graft_warc_info", WarcKernel, "info", KernelCall.LongArray,
+      Seq(bin -> BinaryType))
 
   /** string: the HTTP body of the shard's first 2xx-status response
     * record; null when the shard has none or cannot be walked. */
   def warcBody(bin: Column): Column =
-    GraftShims.column(WarcBodyExpr(GraftShims.expression(bin)))
+    KernelCall.column("graft_warc_body", WarcKernel, "firstOkHtmlBody", StringType,
+      Seq(bin -> BinaryType))
 }

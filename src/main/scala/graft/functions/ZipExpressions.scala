@@ -1,11 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftShims}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType}
+import graft.functions.LittleEndian.{le16, le32, writeLe16, writeLe32}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.types.BinaryType
 
 /** ZIP archive kernel (PKWARE APPNOTE / the format `java.util.zip`
   * implements) — the DATASET-DISTRIBUTION leg: public corpora and
@@ -22,14 +19,6 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType}
   * channel).
   */
 object ZipKernel {
-
-  private def w16(out: java.io.ByteArrayOutputStream, v: Int): Unit = {
-    out.write(v & 0xff); out.write((v >> 8) & 0xff)
-  }
-  private def w32(out: java.io.ByteArrayOutputStream, v: Long): Unit = {
-    out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-    out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-  }
 
   /** One archive over (name, payload, stored?) entries: local headers +
     * data, then the central directory, then the EOCD record — method 0
@@ -54,29 +43,32 @@ object ZipKernel {
           } finally d.end()
         }
       val nameB = name.getBytes("US-ASCII")
-      w32(out, 0x04034b50L) // local file header
-      w16(out, 20); w16(out, 0); w16(out, if (storeIt) 0 else 8)
-      w16(out, 0x6000); w16(out, 0x5b10) // fixed DOS time/date
-      w32(out, crc.getValue); w32(out, data.length.toLong); w32(out, payload.length.toLong)
-      w16(out, nameB.length); w16(out, 0)
+      writeLe32(out, 0x04034b50L) // local file header
+      writeLe16(out, 20); writeLe16(out, 0); writeLe16(out, if (storeIt) 0 else 8)
+      writeLe16(out, 0x6000); writeLe16(out, 0x5b10) // fixed DOS time/date
+      writeLe32(out, crc.getValue); writeLe32(out, data.length.toLong)
+      writeLe32(out, payload.length.toLong)
+      writeLe16(out, nameB.length); writeLe16(out, 0)
       out.write(nameB); out.write(data)
       (name, nameB, crc.getValue, data.length.toLong, payload.length.toLong,
         storeIt, offset)
     }
     val cdStart = out.size()
     recorded.foreach { case (_, nameB, crc, csize, usize, storeIt, offset) =>
-      w32(out, 0x02014b50L) // central directory header
-      w16(out, 20); w16(out, 20); w16(out, 0); w16(out, if (storeIt) 0 else 8)
-      w16(out, 0x6000); w16(out, 0x5b10)
-      w32(out, crc); w32(out, csize); w32(out, usize)
-      w16(out, nameB.length); w16(out, 0); w16(out, 0)
-      w16(out, 0); w16(out, 0); w32(out, 0L); w32(out, offset.toLong)
+      writeLe32(out, 0x02014b50L) // central directory header
+      writeLe16(out, 20); writeLe16(out, 20); writeLe16(out, 0)
+      writeLe16(out, if (storeIt) 0 else 8)
+      writeLe16(out, 0x6000); writeLe16(out, 0x5b10)
+      writeLe32(out, crc); writeLe32(out, csize); writeLe32(out, usize)
+      writeLe16(out, nameB.length); writeLe16(out, 0); writeLe16(out, 0)
+      writeLe16(out, 0); writeLe16(out, 0); writeLe32(out, 0L); writeLe32(out, offset.toLong)
       out.write(nameB)
     }
     val cdSize = out.size() - cdStart
-    w32(out, 0x06054b50L) // end of central directory
-    w16(out, 0); w16(out, 0); w16(out, recorded.size); w16(out, recorded.size)
-    w32(out, cdSize.toLong); w32(out, cdStart.toLong); w16(out, 0)
+    writeLe32(out, 0x06054b50L) // end of central directory
+    writeLe16(out, 0); writeLe16(out, 0)
+    writeLe16(out, recorded.size); writeLe16(out, recorded.size)
+    writeLe32(out, cdSize.toLong); writeLe32(out, cdStart.toLong); writeLe16(out, 0)
     out.toByteArray
   }
 
@@ -86,22 +78,16 @@ object ZipKernel {
     * walk must report the entry with `n_crc_bad` ticking. */
   def tamperLastDirectoryCrc(bytes: Array[Byte]): Array[Byte] = {
     val e = bytes.length - 22
-    val n = r16(bytes, e + 10)
-    var i = r32(bytes, e + 16).toInt
+    val n = le16(bytes, e + 10)
+    var i = le32(bytes, e + 16).toInt
     var k = 0
     while (k < n - 1) {
-      i += 46 + r16(bytes, i + 28) + r16(bytes, i + 30) + r16(bytes, i + 32)
+      i += 46 + le16(bytes, i + 28) + le16(bytes, i + 30) + le16(bytes, i + 32)
       k += 1
     }
     bytes(i + 16) = (bytes(i + 16) ^ 0xff).toByte
     bytes
   }
-
-  private def r16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def r32(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-      ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
 
   /** `[is_zip, n_entries, n_stored, total_usize, n_crc_bad,
     * n_verify_fail]` (longs) — central-directory-first walk with REAL
@@ -124,36 +110,36 @@ object ZipKernel {
     var e = bytes.length - 22
     val floor = math.max(0, bytes.length - 22 - 0xffff)
     def eocdValid(at: Int): Boolean =
-      r32(bytes, at) == 0x06054b50L &&
-        at + 22 + r16(bytes, at + 20) == bytes.length &&
-        r32(bytes, at + 16) + r32(bytes, at + 12) == at.toLong
+      le32(bytes, at) == 0x06054b50L &&
+        at + 22 + le16(bytes, at + 20) == bytes.length &&
+        le32(bytes, at + 16) + le32(bytes, at + 12) == at.toLong
     while (e >= floor && !eocdValid(e)) e -= 1
     if (e < floor) return fail
-    val n = r16(bytes, e + 10)
-    val cdOff = r32(bytes, e + 16)
+    val n = le16(bytes, e + 10)
+    val cdOff = le32(bytes, e + 16)
     if (cdOff < 0 || cdOff > bytes.length) return fail
     var i = cdOff.toInt
     var k = 0
     var nStored = 0L; var usizeTotal = 0L; var crcBad = 0L; var verifyFail = 0L
     try {
       while (k < n) {
-        if (i + 46 > bytes.length || r32(bytes, i) != 0x02014b50L) return fail
-        val method = r16(bytes, i + 10)
-        val crcStored = r32(bytes, i + 16)
-        val csize = r32(bytes, i + 20)
-        val usize = r32(bytes, i + 24)
-        val nameLen = r16(bytes, i + 28)
-        val extraLen = r16(bytes, i + 30)
-        val commentLen = r16(bytes, i + 32)
-        val lfhOff = r32(bytes, i + 42)
+        if (i + 46 > bytes.length || le32(bytes, i) != 0x02014b50L) return fail
+        val method = le16(bytes, i + 10)
+        val crcStored = le32(bytes, i + 16)
+        val csize = le32(bytes, i + 20)
+        val usize = le32(bytes, i + 24)
+        val nameLen = le16(bytes, i + 28)
+        val extraLen = le16(bytes, i + 30)
+        val commentLen = le16(bytes, i + 32)
+        val lfhOff = le32(bytes, i + 42)
         // verify the stream at the local header
         var ok = true
         val crc = new java.util.zip.CRC32()
-        if (lfhOff + 30 > bytes.length || r32(bytes, lfhOff.toInt) != 0x04034b50L) ok = false
+        if (lfhOff + 30 > bytes.length || le32(bytes, lfhOff.toInt) != 0x04034b50L) ok = false
         else {
           val lo = lfhOff.toInt
-          val lNameLen = r16(bytes, lo + 26)
-          val lExtraLen = r16(bytes, lo + 28)
+          val lNameLen = le16(bytes, lo + 26)
+          val lExtraLen = le16(bytes, lo + 28)
           val dataAt = lo + 30 + lNameLen + lExtraLen
           if (dataAt + csize > bytes.length) ok = false
           else if (method == 0) {
@@ -190,36 +176,10 @@ object ZipKernel {
   }
 }
 
-/** Fused zip archive audit: binary → array<long> `[is_zip, n_entries,
-  * n_stored, total_usize, n_crc_bad, n_verify_fail]` — one
-  * directory-first walk with real inflate + CRC verification per entry,
-  * inside WholeStageCodegen, zero shuffle: the manifest scan of a
-  * dataset-distribution corpus. */
-case class ZipInfoExpr(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_zip_info requires a binary argument, got ${t.sql}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_zip_info"
-
-  override def nullSafeEval(b: Any): Any =
-    new GenericArrayData(ZipKernel.info(b.asInstanceOf[Array[Byte]]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"""${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  graft.functions.ZipKernel.info($b));""".stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object ZipExpressions {
   /** array<long> [is_zip, n_entries, n_stored, total_usize, n_crc_bad,
     * n_verify_fail] of a binary column holding a zip archive. */
   def zipInfo(bin: Column): Column =
-    GraftShims.column(ZipInfoExpr(GraftShims.expression(bin)))
+    KernelCall.column("graft_zip_info", ZipKernel, "info", KernelCall.LongArray,
+      Seq(bin -> BinaryType))
 }

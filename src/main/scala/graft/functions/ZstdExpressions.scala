@@ -1,11 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftShims}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType}
+import graft.functions.LittleEndian.{le16, le32}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.types.BinaryType
 
 /** Zstandard frame kernel (RFC 8878) — the MODERN-LAKE sibling of the
   * q337 gzip leg: zstd is the codec the lake actually runs (parquet
@@ -36,10 +33,6 @@ object ZstdKernel {
       ctx.compress(payload)
     } finally ctx.close()
   }
-
-  private def le32(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-      ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
 
   /** `[is_zstd, fcs, has_checksum, single_segment, decode_ok, n_decoded]`
     * (longs) — is_zstd = 1 iff the magic and a parseable frame header
@@ -72,7 +65,7 @@ object ZstdKernel {
     if (i + fcsSize > bytes.length) return fail
     val fcs = fcsSize match {
       case 1 => (bytes(i) & 0xffL)
-      case 2 => 256L + ((bytes(i) & 0xffL) | ((bytes(i + 1) & 0xffL) << 8))
+      case 2 => 256L + le16(bytes, i)
       case 4 => le32(bytes, i)
       case _ => le32(bytes, i) | (le32(bytes, i + 4) << 32)
     }
@@ -93,36 +86,10 @@ object ZstdKernel {
   }
 }
 
-/** Fused zstd frame audit: binary → array<long> `[is_zstd, fcs,
-  * has_checksum, single_segment, decode_ok, n_decoded]` — one hand
-  * header parse + one REAL native decompress (checksum-verifying) per
-  * row inside WholeStageCodegen, zero shuffle: the format-verification
-  * scan of a zstd-compressed lake object. */
-case class ZstdInfoExpr(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_zstd_info requires a binary argument, got ${t.sql}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_zstd_info"
-
-  override def nullSafeEval(b: Any): Any =
-    new GenericArrayData(ZstdKernel.info(b.asInstanceOf[Array[Byte]]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"""${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  graft.functions.ZstdKernel.info($b));""".stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object ZstdExpressions {
   /** array<long> [is_zstd, fcs, has_checksum, single_segment, decode_ok,
     * n_decoded] of a binary column holding a zstd frame. */
   def zstdInfo(bin: Column): Column =
-    GraftShims.column(ZstdInfoExpr(GraftShims.expression(bin)))
+    KernelCall.column("graft_zstd_info", ZstdKernel, "info", KernelCall.LongArray,
+      Seq(bin -> BinaryType))
 }

@@ -340,7 +340,7 @@ object Multimodal {
     * little-endian two's-complement encoded — closed-form, so a SQL
     * oracle can regenerate the sample VALUES without parsing bytes while
     * the Spark side proves the real byte round-trip. Delegates to the
-    * fused native [[graft.functions.SynthPcm16Expr]] kernel (codegen'd
+    * fused native [[graft.functions.PcmExpressions.synthPcm16]] kernel (codegen'd
     * whole-array synthesis — no UDF, no driver loop, no per-sample HOF
     * lambda). */
   def synthPcm16(ids: DataFrame, idCol: String, nSamples: Int): DataFrame = {
@@ -357,7 +357,7 @@ object Multimodal {
   /** REAL frame extraction from a concatenated image stream (MJPEG-style
     * captures, multi-PNG dumps): one fused byte-scan per row splits the
     * stream at every `magic` occurrence
-    * ([[graft.functions.SplitByMagicExpr]] — garbage before the first
+    * ([[graft.functions.PcmExpressions.splitFrames]] — garbage before the first
     * marker is ignored, a mid-capture pickup must not poison the
     * split), appending an `frames` array<binary> column; explode it and
     * feed [[decodeImages]] for real per-frame decode. */
@@ -495,7 +495,7 @@ object Multimodal {
   ): DataFrame = {
     require(frameSamples >= 1, s"frameSamples must be >= 1, got $frameSamples")
     val q6 = (c: Column) => graft.functions.Quantize.scaledFloor(c, 6)
-    // ONE fused kernel call per row ([[graft.functions.PcmStatsExpr]]):
+    // ONE fused kernel call per row ([[graft.functions.PcmExpressions.pcmStats]]):
     // the higher-order-function formulation this replaces evaluated its
     // lambdas interpretively per SAMPLE (~20 s for 5k docs at sf0.1) —
     // a native expression keeps the whole stat pass inside codegen
@@ -528,7 +528,7 @@ object Multimodal {
     * (all-silence audio leaves the corpus — the curation semantics).
     *
     * Scale shape: ONE fused kernel call per row
-    * ([[graft.functions.VadSegmentsExpr]]) inside whole-stage codegen +
+    * ([[graft.functions.PcmExpressions.vadSegments]]) inside whole-stage codegen +
     * a posexplode — a pure per-row projection, zero shuffle,
     * stream-safe, embarrassingly parallel at 100 TB. */
   def speechSegments(

@@ -177,8 +177,8 @@ object CorpusPack extends QueryPack {
     // REAL audio-leg gate (r14): raw PCM16LE needs no codec library, so
     // this leg runs actual byte decode — synthesize s16le audio per doc
     // from a closed-form integer signal (real little-endian bytes via
-    // the fused native SynthPcm16Expr kernel), then extract RMS / peak /
-    // zero-crossings / frame-energy activity via the fused PcmStatsExpr.
+    // the fused native `PcmExpressions.synthPcm16` kernel), then extract RMS / peak /
+    // zero-crossings / frame-energy activity via the fused `PcmExpressions.pcmStats`.
     // The oracle regenerates the sample VALUES from the same formula
     // (never parsing bytes), so the hash gate proves the byte round-trip
     // AND the feature math: one drifted two's-complement bit, sign rule,

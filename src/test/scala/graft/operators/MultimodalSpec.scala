@@ -72,10 +72,43 @@ class MultimodalSpec extends AnyFunSuite {
       spark.sparkContext.parallelize(Seq(Row(1L, "text/plain", "ab".getBytes("UTF-8"), null)), 1),
       Multimodal.mediaSchema)
     assert(Multimodal.probeBytesExpr(tiny, headLen = 8).head.getString(3) == "6162")
-    val plan = Multimodal.probeBytesExpr(mediaDF).queryExecution.executedPlan.toString
+    assertCodegenProject(Multimodal.probeBytesExpr(mediaDF), "expression probe")
+  }
+
+  /** The projection runs inside WholeStageCodegen, with no object boundary. */
+  private def assertCodegenProject(df: org.apache.spark.sql.DataFrame, what: String): Unit = {
+    val plan = df.queryExecution.executedPlan.toString
     // `*(n)` prefixes mark WholeStageCodegen stages in the compact plan string
-    assert(plan.contains("*(1) Project"), s"expression probe must be codegen'd:\n$plan")
+    assert(plan.contains("*(1) Project"), s"$what must be codegen'd:\n$plan")
     assert(!plan.contains("SerializeFromObject"), s"no object boundary expected:\n$plan")
+  }
+
+  test("kernel-call builders: exact argument types, graft_<name>(<args>) names, codegen'd") {
+    import graft.functions.KernelCorpus._
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row(Array[Byte](1, 2, 3, 4), "x", 7L, 3, "/p")), 1),
+      new StructType().add("content", "binary").add("text", "string").add("id", "bigint")
+        .add("i", "int").add("path", "string"))
+    def args(in: In): Seq[String] = in match {
+      case Bin => Seq("content")
+      case Text => Seq("text")
+      case Id => Seq("id")
+      case Robots => Seq("text", "path")
+    }
+    def wrong(in: In): Seq[String] = in match {
+      case Bin => Seq("text")
+      case Text => Seq("content")
+      case Id => Seq("i")
+      case Robots => Seq("content", "path")
+    }
+    for (b <- builders) {
+      val out = df.select(b.build(args(b.in).map(col)))
+      assert(out.columns.toSeq == Seq(s"${b.name}(${args(b.in).mkString(", ")})"))
+      assertCodegenProject(out, b.name)
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        df.select(b.build(wrong(b.in).map(col))).schema)
+      assert(e.getMessage.contains(b.name), s"${b.name}: ${e.getMessage}")
+    }
   }
 
   test("decodeImages: real PNG and BMP bytes round-trip dims and exact pixels; garbage degrades to a flag") {

@@ -73,6 +73,12 @@ class SafetensorsSpec extends AnyFunSuite {
     val bigOff = """{"a":{"dtype":"U8","shape":[2],""" +
       """"data_offsets":[0,1000000000000000000000000]}}"""
     assert(SafetensorsKernel.info(artifact(bigOff, 2)).head == 0L)
+    // a header length of 2^63 - 1 wraps `8 + hlen` negative: found by
+    // KernelFuzzSpec, it threw StringIndexOutOfBoundsException
+    val maxLen = artifact("""{"a":1}""", 0)
+    for (k <- 0 until 7) maxLen(k) = 0xff.toByte
+    maxLen(7) = 0x7f
+    assert(SafetensorsKernel.info(maxLen).toSeq == Seq(0L, -1L, -1L, -1L, -1L, -1L, -1L))
   }
 
   test("DataFrame chain: safetensorsArtifacts -> safetensorsInfo round-trips the plants") {
