@@ -4,6 +4,7 @@ import graft.functions.DotProductDouble
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.execution.ColumnarRule
 
 /** The engine's `SparkSessionExtensions` hook — the deployment-time way to
   * expose graft's native Catalyst expressions to pure-SQL users:
@@ -17,6 +18,12 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * ([[graft.functions.VectorExpressions.register]] remains the runtime
   * alternative for sessions built elsewhere). [[GraftSession]] wires this
   * in for every session it builds.
+  *
+  * It also adds one physical-plan rule, [[ParameterizeFilterLiterals]]: a
+  * filter's comparison constants become codegen parameters, so a windowed
+  * pull whose bounds move every epoch reuses one compiled class. The rule is
+  * injected as a pre-columnar-transition rule, the one physical-rule hook
+  * that also runs on every adaptive (AQE) re-plan.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -41,5 +48,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           "(standard parameterization: 0.1 prefix scaling, max prefix 4, 0.7 boost threshold)",
         ""),
       graft.functions.JaroWinkler.builder))
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions = ParameterizeFilterLiterals
+    })
   }
 }

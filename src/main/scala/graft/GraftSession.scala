@@ -25,6 +25,14 @@ import org.apache.spark.sql.SparkSession
   *    own session must therefore set
   *    `spark.hadoop.fs.file.impl=graft.core.LocalFileSystem` before anything
   *    in the JVM creates a `file:` FileSystem.
+  *  - `fs.AbstractFileSystem.file.impl` is [[graft.core.LocalFs]], the same
+  *    filesystem behind Hadoop's `FileContext`. Structured Streaming writes
+  *    its checkpoints (offsets, commits, file source and sink logs) through
+  *    `FileContext`, where Hadoop's `LocalFs` forks `chmod` for each file and
+  *    `.crc` and `readlink` twice per rename: 593 processes in one
+  *    `query_mix` pass of the repository's benchmark. `FileContext` builds
+  *    its filesystem from the conf it is given each time, so this key needs
+  *    no ordering.
   */
 object GraftSession {
   def builder(appName: String, master: Option[String] = None): SparkSession.Builder = {
@@ -76,6 +84,8 @@ object GraftSession {
       .config("spark.sql.extensions", "graft.GraftExtensions")
       // in-process chmod and exclusive create for `file:` paths (see above)
       .config("spark.hadoop.fs.file.impl", classOf[graft.core.LocalFileSystem].getName)
+      // the same for Structured Streaming's checkpoints (see above)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.core.LocalFs].getName)
     master.orElse(sys.env.get("SPARK_GRAFT_MASTER").orElse(Some(s"local[$cpus]")))
       .foldLeft(b)(_ master _)
   }

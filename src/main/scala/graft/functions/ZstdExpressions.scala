@@ -72,18 +72,47 @@ object ZstdKernel {
     if (fcs < 0) return fail
     val ckL = if (hasChecksum) 1L else 0L
     val ssL = if (singleSegment) 1L else 0L
-    // Decompression-bomb guard — an audit-scan policy, and the reason a
-    // corrupt FCS field can never drive the allocation: a frame CLAIMING
+    // Decompression-bomb guard — an audit-scan policy: a frame CLAIMING
     // more than 1 GiB of content is refused unread (decode_ok = 0), with
     // the header fields still reported.
     if (fcs > (1L << 30)) return Array(1L, fcs, ckL, ssL, 0L, -1L)
-    val (ok, n) =
-      try {
-        val out = com.github.luben.zstd.Zstd.decompress(bytes, fcs.toInt)
-        (if (out.length.toLong == fcs) 1L else 0L, out.length.toLong)
-      } catch { case _: com.github.luben.zstd.ZstdException => (0L, -1L) }
+    val (ok, n) = decodedLength(bytes, fcs) match {
+      case Some(len) => (if (len == fcs) 1L else 0L, len)
+      case None      => (0L, -1L)
+    }
     Array(1L, fcs, ckL, ssL, ok, n)
   }
+
+  /** Decoded bytes never take more than this much heap per call. */
+  private final val DecodeBufferBytes = 32 * 1024
+
+  /** The decoded length of `bytes` as the one-shot `Zstd.decompress(bytes,
+    * fcs)` returns it, or None where that call fails. The one-shot call
+    * allocates the claimed `fcs` up front, so it runs only for a claim that
+    * fits in [[DecodeBufferBytes]]: a 20-byte corrupt frame claiming a GiB
+    * would cost a GiB of heap per call. A larger claim is decoded as a
+    * stream and counted through a buffer of that size, never kept, with the
+    * one-shot call's failures: output beyond `fcs` (the buffer it would have
+    * filled), a corrupt, truncated or trailing-garbage input, a content size
+    * or checksum that does not match. The stream's window limit is lifted to
+    * the format's maximum, as the one-shot call (which uses its output as
+    * the window) has none. */
+  private def decodedLength(bytes: Array[Byte], fcs: Long): Option[Long] =
+    try {
+      if (fcs <= DecodeBufferBytes) Some(com.github.luben.zstd.Zstd.decompress(bytes, fcs.toInt).length.toLong)
+      else {
+        val in = new com.github.luben.zstd.ZstdInputStreamNoFinalizer(
+          new java.io.ByteArrayInputStream(bytes), com.github.luben.zstd.RecyclingBufferPool.INSTANCE)
+        try {
+          in.setLongMax(31)
+          val buf = new Array[Byte](DecodeBufferBytes)
+          var total = 0L
+          var r = in.read(buf)
+          while (r >= 0 && total <= fcs) { total += r; r = in.read(buf) }
+          if (total > fcs) None else Some(total)
+        } finally in.close()
+      }
+    } catch { case _: java.io.IOException | _: com.github.luben.zstd.ZstdException => None }
 }
 
 object ZstdExpressions {

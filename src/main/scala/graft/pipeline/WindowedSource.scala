@@ -116,6 +116,13 @@ private object ObservedMax extends QueryExecutionListener {
   * later pulls bind new window bounds into the same DataFrame, so a parquet
   * relation infers its schema (a Spark job) and a JDBC relation sends its
   * schema probe once, not once per pull.
+  *
+  * The bounds are literals, which Spark would inline into the generated
+  * code of the scan-and-filter stage, so every epoch would compile a new
+  * class twice (driver and task) and never run a JIT-compiled scan loop. In a
+  * graft session [[graft.ParameterizeFilterLiterals]] turns them into codegen
+  * parameters of the physical filter: epochs after the first compile
+  * nothing, while the scan's pushed filters still carry the literal bounds.
   */
 object WindowedSource {
 

@@ -4,10 +4,15 @@ import graft.core.GraftError
 import java.io.ByteArrayOutputStream
 import java.nio.ByteBuffer
 import org.apache.avro.Schema
-import org.apache.avro.generic.{GenericDatumReader, GenericDatumWriter, GenericRecord}
+import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.avro.io.{DecoderFactory, EncoderFactory}
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, LeafExpression, NonSQLExpression, Unevaluable}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, DataType, NullType, StringType}
 import scala.jdk.CollectionConverters._
 
 /** The Confluent Schema Registry wire format
@@ -74,17 +79,19 @@ final class ConfluentAvroSerde(registry: SchemaRegistry) {
   * §1.2): serialize the named fields of every row into a framed
   * `magic ‖ id ‖ avro-binary` column, and decode such a column back into
   * typed fields. Runs per-partition (serde + registry instantiated once per
-  * partition from the serializable schema JSON), so record bytes never
-  * visit the driver — the exact shape a Kafka-bound `foreachBatch` uses.
+  * partition from the serializable schema JSON and `registryFactory`), so
+  * record bytes never visit the driver — the exact shape a Kafka-bound
+  * `foreachBatch` uses. Serializing is one expression in the query's own
+  * projection ([[ConfluentAvroFrame]]); decoding runs in `mapPartitions`.
   *
   * Supported field types: boolean, int, long, float, double, string.
   */
 object ConfluentAvroFrames {
-  import org.apache.spark.sql.{DataFrame, Row}
+  import org.apache.spark.sql.{DataFrame, GraftShims, Row}
   import org.apache.spark.sql.catalyst.encoders.RowEncoder
   import org.apache.spark.sql.types._
 
-  private def sparkType(f: Schema.Field): DataType = f.schema().getType match {
+  private[serde] def sparkType(f: Schema.Field): DataType = f.schema().getType match {
     case Schema.Type.BOOLEAN => BooleanType
     case Schema.Type.INT     => IntegerType
     case Schema.Type.LONG    => LongType
@@ -125,7 +132,12 @@ object ConfluentAvroFrames {
     * producer wants (partition key / headers columns ride alongside the
     * encoded value) and the shape a corruption-injection test needs (a
     * carrier id survives encoding). Same cast/null contract as
-    * [[serialize]], which is a thin projection over this. */
+    * [[serialize]], which is a thin projection over this.
+    *
+    * The wire is one [[ConfluentAvroFrame]] expression over a struct of the
+    * cast fields, so the framing runs inside the query's own generated code:
+    * no object round trip (deserialize to `Row`, `mapPartitions`, serialize
+    * back) and no encoder. */
   def serializeAppend(
       df: DataFrame,
       topic: String,
@@ -135,26 +147,12 @@ object ConfluentAvroFrames {
   ): DataFrame = {
     require(!df.columns.contains("wire"), "input already has a wire column")
     val fields = new Schema.Parser().parse(schemaJson).getFields.asScala.toSeq
-    val fieldNames = fields.map(_.name)
-    val baseN = df.schema.fields.length
-    // shadow casts appended after the originals: the avro writer reads the
-    // casted shadows by position, the output keeps the originals untouched
+    // shadow casts: the frame reads the casted fields by position, the
+    // output keeps the originals untouched
     val castCols = fields.map(f => col(f.name).cast(sparkType(f)).as(s"__graft_ser_${f.name}"))
-    val out = StructType(df.schema.fields :+ StructField("wire", BinaryType, nullable = false))
-    val enc = RowEncoder.encoderFor(out)
-    df.select(col("*") +: castCols: _*).mapPartitions { rows =>
-      val schema = new Schema.Parser().parse(schemaJson)
-      val serde = new ConfluentAvroSerde(registryFactory())
-      rows.map { r =>
-        val rec = new org.apache.avro.generic.GenericData.Record(schema)
-        fieldNames.zipWithIndex.foreach { case (n, i) =>
-          if (r.isNullAt(baseN + i))
-            throw GraftError(s"Serialization failed: null value in field '$n' (schema has no null union)")
-          rec.put(n, r.get(baseN + i))
-        }
-        Row.fromSeq(r.toSeq.take(baseN) :+ serde.serialize(topic, isKey, rec))
-      }
-    }(enc)
+    val frame = ConfluentAvroFrame(
+      GraftShims.expression(struct(castCols: _*)), topic, isKey, schemaJson, registryFactory)
+    df.select(col("*"), GraftShims.column(frame).as("wire"))
   }
 
   /** Framed binary column -> the input columns with one typed column PER
@@ -322,6 +320,83 @@ object ConfluentAvroFrames {
       val r = new InMemorySchemaRegistry
       r.getOrRegisterId(ConfluentWire.subject(topic, isKey), new Schema.Parser().parse(writerJson))
       r
+  }
+}
+
+/** `magic ‖ id ‖ avro-binary` of one flat record: `fields` is a struct whose
+  * fields are the schema's fields, in order, already cast to their Spark
+  * types ([[ConfluentAvroFrames.serializeAppend]] builds it).
+  *
+  * Contract:
+  *  - one [[ConfluentAvroSerde]] and one registry from `registryFactory` per
+  *    partition. In generated code they live in a field of the generated
+  *    class, which each task instantiates once; interpreted, the expression
+  *    is `stateful`, so every projection gets a fresh copy with its own;
+  *  - a null field fails the task with a [[GraftError]] naming the field;
+  *  - never evaluated at planning time. `ConvertToLocalRelation` evaluates a
+  *    projection over a `LocalRelation` on the driver unless the projection
+  *    holds an `Unevaluable` expression, so the frame carries one,
+  *    [[NotAtPlanTime]], as a child it never evaluates. The registry (which
+  *    may register a schema) is only ever built in a task.
+  */
+case class ConfluentAvroFrame(
+    fields: Expression,
+    topic: String,
+    isKey: Boolean,
+    schemaJson: String,
+    registryFactory: ConfluentAvroFrames.RegistryFactory) extends Expression with NonSQLExpression {
+
+  override def children: Seq[Expression] = Seq(fields, NotAtPlanTime)
+  override def dataType: DataType = BinaryType
+  override def nullable: Boolean = false
+  override def stateful: Boolean = true
+  override def toString: String = s"confluent_avro_frame($fields)"
+
+  def newFramer(): ConfluentAvroFramer = new ConfluentAvroFramer(schemaJson, topic, isKey, registryFactory())
+
+  @transient private lazy val framer = newFramer()
+
+  override def eval(input: InternalRow): Any = framer.frame(fields.eval(input).asInstanceOf[InternalRow])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("frame", this)
+    val framer = ctx.addMutableState(classOf[ConfluentAvroFramer].getName, "framer",
+      v => s"$v = $self.newFramer();")
+    val row = fields.genCode(ctx)
+    ev.copy(isNull = FalseLiteral, code = code"""
+      ${row.code}
+      byte[] ${ev.value} = $framer.frame(${row.value});""")
+  }
+
+  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
+    copy(fields = newChildren.head)
+}
+
+/** The `Unevaluable` child of [[ConfluentAvroFrame]] that keeps the
+  * optimizer from evaluating it. */
+case object NotAtPlanTime extends LeafExpression with Unevaluable {
+  override def dataType: DataType = NullType
+  override def nullable: Boolean = true
+}
+
+/** One partition's framing state for [[ConfluentAvroFrame]]. */
+final class ConfluentAvroFramer(schemaJson: String, topic: String, isKey: Boolean, registry: SchemaRegistry) {
+  private val schema = new Schema.Parser().parse(schemaJson)
+  private val names = schema.getFields.asScala.map(_.name).toArray
+  private val types = schema.getFields.asScala.map(ConfluentAvroFrames.sparkType).toArray
+  private val serde = new ConfluentAvroSerde(registry)
+
+  def frame(row: InternalRow): Array[Byte] = {
+    val rec = new GenericData.Record(schema)
+    var i = 0
+    while (i < names.length) {
+      if (row.isNullAt(i))
+        throw GraftError(s"Serialization failed: null value in field '${names(i)}' (schema has no null union)")
+      // the values a `Row` holds: boxed primitives and java.lang.String
+      rec.put(i, if (types(i) == StringType) row.getUTF8String(i).toString else row.get(i, types(i)))
+      i += 1
+    }
+    serde.serialize(topic, isKey, rec)
   }
 }
 

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path => JPath}
 import java.nio.file.attribute.PosixFilePermissions
 import java.util.concurrent.{Callable, CyclicBarrier, Executors, TimeUnit}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, Path}
+import org.apache.hadoop.fs.{AbstractFileSystem, CreateFlag, FileAlreadyExistsException, FileContext, FileSystem, Options, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
@@ -13,6 +13,8 @@ import scala.jdk.CollectionConverters._
 /** graft's `file:` filesystem against Hadoop's stock `LocalFileSystem`: the
   * same permissions on every file, `.crc` sidecar and directory, a rename
   * that does not replace a file, and an exclusive create-without-overwrite.
+  * Behind `FileContext`, graft's `LocalFs` writes what Hadoop's `LocalFs`
+  * writes and reads a link's status in process.
   */
 class LocalFileSystemSpec extends AnyFunSuite {
 
@@ -120,5 +122,59 @@ class LocalFileSystemSpec extends AnyFunSuite {
       pool.shutdownNow()
       fs.close()
     }
+  }
+
+  private def newFc(impl: Class[_ <: AbstractFileSystem]): FileContext = {
+    val conf = new Configuration()
+    conf.setClass("fs.AbstractFileSystem.file.impl", impl, classOf[AbstractFileSystem])
+    FileContext.getFileContext(URI.create("file:///"), conf)
+  }
+
+  /** A streaming checkpoint's writes: a log file written to a temporary
+    * name and renamed into place, with and without overwrite. */
+  private def checkpoint(fc: FileContext, root: JPath): Unit = {
+    def p(rel: String) = new Path(root.resolve(rel).toUri)
+    def write(rel: String, body: String): Unit = {
+      val out = fc.create(p(rel), java.util.EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE),
+        Options.CreateOpts.createParent())
+      try out.write(body.getBytes("UTF-8")) finally out.close()
+    }
+    fc.mkdir(p("offsets"), FsPermission.getDirDefault, true)
+    for (b <- 0 until 3) {
+      write(s"offsets/.$b.tmp", s"v1\n{\"batch\":$b}" * (b * 300 + 1))
+      fc.rename(p(s"offsets/.$b.tmp"), p(s"offsets/$b"), Options.Rename.NONE)
+    }
+    write("offsets/.1.again.tmp", "replaced")
+    intercept[FileAlreadyExistsException](
+      fc.rename(p("offsets/.1.again.tmp"), p("offsets/1"), Options.Rename.NONE))
+    fc.rename(p("offsets/.1.again.tmp"), p("offsets/1"), Options.Rename.OVERWRITE)
+  }
+
+  test("FileContext: the checkpoint files, sidecars and bytes of Hadoop's LocalFs") {
+    val (graftRoot, stockRoot) =
+      (Files.createTempDirectory("graft-fc-graft"), Files.createTempDirectory("graft-fc-stock"))
+    checkpoint(newFc(classOf[LocalFs]), graftRoot)
+    checkpoint(newFc(classOf[org.apache.hadoop.fs.local.LocalFs]), stockRoot)
+    val (got, want) = (tree(graftRoot), tree(stockRoot))
+    assert(want.contains("offsets/.2.crc") && want.contains("offsets/1"))
+    assert(got == want)
+    want.keys.filter(k => Files.isRegularFile(stockRoot.resolve(k))).foreach { k =>
+      assert(Files.readAllBytes(graftRoot.resolve(k)).sameElements(Files.readAllBytes(stockRoot.resolve(k))), k)
+    }
+    assert(Files.readString(graftRoot.resolve("offsets/1")) == "replaced")
+  }
+
+  test("FileContext: a symbolic link's status and target, read in process") {
+    val fc = newFc(classOf[LocalFs])
+    val root = Files.createTempDirectory("graft-fc-link")
+    Files.writeString(root.resolve("target"), "x")
+    Files.createSymbolicLink(root.resolve("link"), root.resolve("target"))
+    Files.createSymbolicLink(root.resolve("dangling"), root.resolve("gone"))
+    val link = fc.getFileLinkStatus(new Path(root.resolve("link").toUri))
+    assert(link.isSymlink && link.getSymlink.toUri.getPath == root.resolve("target").toString)
+    assert(link.getLen == 1)
+    assert(fc.getFileLinkStatus(new Path(root.resolve("dangling").toUri)).isSymlink)
+    val plain = fc.getFileLinkStatus(new Path(root.resolve("target").toUri))
+    assert(!plain.isSymlink && plain.isFile)
   }
 }

@@ -73,4 +73,58 @@ class ZstdSpec extends AnyFunSuite {
     assert(got(2).getBoolean(1) && got(2).getLong(2) == 12L &&
       got(2).getBoolean(3) && !got(2).getBoolean(4) && got(2).isNullAt(5))
   }
+
+  /** decode_ok and n_decoded as the one-shot decompress into an fcs-sized
+    * buffer reported them. */
+  private def oneShot(bytes: Array[Byte], fcs: Long): Seq[Long] =
+    try {
+      val out = com.github.luben.zstd.Zstd.decompress(bytes, fcs.toInt)
+      Seq(if (out.length.toLong == fcs) 1L else 0L, out.length.toLong)
+    } catch { case _: com.github.luben.zstd.ZstdException => Seq(0L, -1L) }
+
+  test("the streamed decode reports what the one-shot decompress did") {
+    // 40,000 bytes: a claim above the 32 KiB one-shot limit streams
+    val text = ("stream me " * 4000).getBytes("UTF-8")
+    val frames = Seq(ZstdKernel.zstd(text, 3, true), ZstdKernel.zstd(text.take(300), 19, false),
+      ZstdKernel.zstd(Array.empty, 1, true))
+    // a skippable frame: magic 0x184D2A50, 4-byte length, payload
+    val skippable = Array[Byte](0x50, 0x2a, 0x4d, 0x18, 3, 0, 0, 0, 1, 2, 3)
+    val rng = new scala.util.Random(17)
+    val cases = frames ++
+      frames.flatMap(f => frames.map(g => f ++ g)) ++       // concatenated frames
+      frames.map(_ ++ skippable) ++
+      frames.flatMap(f => (1 to 6).map(k => f ++ Array.fill(k)(rng.nextInt(256).toByte))) ++ // trailing garbage
+      frames.flatMap(f => (6 until f.length).map(f.take)) ++ // truncations
+      frames.flatMap(f => (0 until 400).map { _ =>            // flipped bytes
+        val m = f.clone(); val i = rng.nextInt(m.length); m(i) = (m(i) ^ (1 << rng.nextInt(8))).toByte; m
+      })
+    var (compared, streamed) = (0, 0)
+    cases.foreach { c =>
+      val got = ZstdKernel.info(c).toSeq
+      if (got(0) == 1L && got(1) <= (1 << 20)) {
+        assert(got.drop(4) == oneShot(c, got(1)), s"${c.map("%02x".format(_)).mkString}: $got")
+        compared += 1
+        if (got(1) > 32 * 1024) streamed += 1
+      }
+    }
+    assert(compared > 500 && streamed > 200, s"$compared compared, $streamed streamed")
+  }
+
+  test("a corrupt frame claiming a GiB costs a bounded buffer, not the claim") {
+    // magic, single-segment with a 4-byte content size of 2^30 - 1, garbage
+    val bomb = Array[Byte](0x28, 0xb5.toByte, 0x2f, 0xfd.toByte, 0xa0.toByte, 0xff.toByte, 0xff.toByte,
+      0xff.toByte, 0x3f) ++ Array.fill[Byte](11)(0x55)
+    assert(bomb.length == 20)
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    def allocated = mx.getThreadAllocatedBytes(Thread.currentThread.getId)
+    ZstdKernel.info(bomb) // class loading and the decoder's buffer pool
+    (1 to 3).foreach { _ =>
+      val before = allocated
+      val got = ZstdKernel.info(bomb).toSeq
+      val bytes = allocated - before
+      assert(got == Seq(1L, (1L << 30) - 1, 0L, 1L, 0L, -1L))
+      assert(bytes < (1L << 20), s"$bytes bytes allocated by one call")
+    }
+  }
 }

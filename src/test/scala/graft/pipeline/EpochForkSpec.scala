@@ -8,14 +8,17 @@ import jdk.jfr.Recording
 import jdk.jfr.consumer.{RecordedEvent, RecordingFile}
 import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
-/** The epoch and resume path starts no operating-system process. Hadoop's
-  * local filesystem forks `chmod` for every file it creates when the native
-  * `libhadoop` is absent: 13 per epoch of a tumbling window into the
-  * exactly-once parquet sink, 2 per runner start.
+/** The epoch and resume path, and a Structured Streaming query's
+  * checkpoint, start no operating-system process. Hadoop's local filesystem
+  * forks `chmod` for every file it creates when the native `libhadoop` is
+  * absent: 13 per epoch of a tumbling window into the exactly-once parquet
+  * sink, 2 per runner start; its `FileContext` filesystem also forks
+  * `readlink` twice per checkpoint rename.
   */
 class EpochForkSpec extends AnyFunSuite {
   private def spark = TestSpark.spark
@@ -26,6 +29,10 @@ class EpochForkSpec extends AnyFunSuite {
     * `rm -rf` whenever the garbage collector gets to it.
     */
   private def processStarts(body: => Unit): Seq[String] = {
+    // Spark forks `getconf PAGESIZE` once per JVM, when its process-tree
+    // metrics are first set up on a heartbeat; set them up before recording,
+    // or a run of this suite alone records that fork
+    Class.forName("org.apache.spark.executor.ProcfsMetricsGetter$")
     val recording = new Recording()
     try {
       recording.enable("jdk.ProcessStart").withStackTrace()
@@ -79,5 +86,29 @@ class EpochForkSpec extends AnyFunSuite {
 
     // the recording does see a forked process
     assert(processStarts(new ProcessBuilder("true").start().waitFor()).size == 1)
+  }
+
+  test("a 3-batch AvailableNow parquet-to-parquet stream forks no process") {
+    val schema = StructType(Seq(StructField("id", LongType), StructField("v", StringType)))
+    val src = Files.createTempDirectory("graft-fork-stream-src").toString
+    (0 until 3).foreach { b =>
+      spark.createDataFrame((1 to 5).map(i => Row((b * 10 + i).toLong, s"v$i")).asJava, schema)
+        .coalesce(1).write.mode("append").parquet(src)
+    }
+    val ckpt = Files.createTempDirectory("graft-fork-stream-ckpt").resolve("ckpt")
+    val out = Files.createTempDirectory("graft-fork-stream-out").toString
+    val starts = processStarts {
+      spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
+        .writeStream.format("parquet").option("checkpointLocation", ckpt.toString)
+        .trigger(Trigger.AvailableNow()).start(out).awaitTermination()
+    }
+    assert(starts.isEmpty, s"${starts.size} processes started:\n${starts.mkString("\n")}")
+    assert(spark.read.parquet(out).count() == 15)
+    // Hadoop's checkpoint layout: a log file and its `.crc` sidecar per batch
+    def names(dir: String) = {
+      val s = Files.list(ckpt.resolve(dir)); try s.toArray.map(_.toString.split('/').last).toSet finally s.close()
+    }
+    assert(names("offsets") == Set("0", "1", "2", ".0.crc", ".1.crc", ".2.crc"))
+    assert(names("commits") == Set("0", "1", "2", ".0.crc", ".1.crc", ".2.crc"))
   }
 }
