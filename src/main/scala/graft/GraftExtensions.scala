@@ -24,6 +24,19 @@ import org.apache.spark.sql.execution.ColumnarRule
   * pull whose bounds move every epoch reuses one compiled class. The rule is
   * injected as a pre-columnar-transition rule, the one physical-rule hook
   * that also runs on every adaptive (AQE) re-plan.
+  *
+  * Every session state it builds also makes the SparkContext's Hadoop conf
+  * keep no per-property source ([[HadoopConfSources]]), so the conf every
+  * job serializes (scan broadcast, write description, stats tracker) drops
+  * from about 114 KB and 5-7 ms to about 70 KB and 0.5 ms:
+  *  - dropped: the name of the resource each key came from
+  *    (`core-default.xml`, ...); keys and values are unchanged;
+  *  - the map that records sources is replaced, not cleared once: Hadoop
+  *    re-records every source each time a default resource is registered,
+  *    which the HDFS client classes do after start;
+  *  - `Configuration.getPropertySources` reads null in graft sessions, and
+  *    XML/JSON dumps carry no `<source>`. Spark reads sources only for its
+  *    environment report at context start, before this hook runs.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -48,8 +61,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           "(standard parameterization: 0.1 prefix scaling, max prefix 4, 0.7 boost threshold)",
         ""),
       graft.functions.JaroWinkler.builder))
-    ext.injectColumnar(_ => new ColumnarRule {
-      override def preColumnarTransitions = ParameterizeFilterLiterals
-    })
+    ext.injectColumnar { session =>
+      HadoopConfSources.discard(session.sparkContext.hadoopConfiguration)
+      new ColumnarRule {
+        override def preColumnarTransitions = ParameterizeFilterLiterals
+      }
+    }
   }
 }

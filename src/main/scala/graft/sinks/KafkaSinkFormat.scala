@@ -1,8 +1,11 @@
 package graft.sinks
 
 import graft.core.{Header, Record}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftShims, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** The Kafka sink contract: Spark's `kafka` format consumes exactly
   * `key BINARY, value BINARY, headers ARRAY<STRUCT<key:STRING,value:BINARY>>,
@@ -13,6 +16,15 @@ import org.apache.spark.sql.functions._
   * and is pure configuration).
   */
 object KafkaSinkFormat {
+
+  /** `ARRAY<STRUCT<key:STRING,value:BINARY>>`, the sink's `headers` type. */
+  private val HeadersType: DataType = ArrayType(StructType(Seq(
+    StructField("key", StringType), StructField("value", BinaryType))))
+
+  /** The non-null empty `headers` of every row [[fromColumns]] emits, built
+    * once: a `typedLit` and a DDL cast per call cost 0.3-0.5 ms. */
+  private val noHeaders: Column =
+    GraftShims.column(Literal(new GenericArrayData(Array.empty[Any]), HeadersType))
 
   /** Columnar path: select/rename arbitrary columns into the sink schema.
     * Key/value columns are serialized with the engine's serde upstream (see
@@ -27,8 +39,7 @@ object KafkaSinkFormat {
   ): DataFrame = {
     val key = col(keyCol).cast("binary").as("key")
     val value = col(valueCol).cast("binary").as("value")
-    val headers = typedLit(Seq.empty[(String, Array[Byte])])
-      .cast("array<struct<key:string,value:binary>>").as("headers")
+    val headers = noHeaders.as("headers")
     timestampCol match {
       case Some(ts) => df.select(key, value, headers, col(ts).cast("timestamp").as("timestamp"))
       case None     => df.select(key, value, headers)
@@ -46,7 +57,7 @@ object KafkaSinkFormat {
       .toDF("key", "value", "headers", "ts_millis")
       .select(
         col("key"), col("value"),
-        col("headers").cast("array<struct<key:string,value:binary>>").as("headers"),
+        col("headers").cast(HeadersType).as("headers"),
         (col("ts_millis") / 1000.0).cast("timestamp").as("timestamp"))
   }
 

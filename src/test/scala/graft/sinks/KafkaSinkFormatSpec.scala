@@ -19,12 +19,15 @@ class KafkaSinkFormatSpec extends AnyFunSuite {
       nullable = false)))
 
   test("fromColumns emits exactly the kafka sink schema") {
-    val df = Seq(("k1", "v1"), ("k2", "v2")).toDF("k", "v")
+    val df = Seq(("k1", "v1", java.sql.Timestamp.valueOf("2026-01-01 00:00:00")), ("k2", "v2", null))
+      .toDF("k", "v", "t")
     val out = KafkaSinkFormat.fromColumns(df, "k", "v")
-    assert(out.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
-      sinkSchemaNoTs.fields.map(f => (f.name, f.dataType)).toSeq)
+    assert(out.schema == sinkSchemaNoTs)
     val rows = out.collect()
     assert(rows.map(r => new String(r.getAs[Array[Byte]]("key"), "UTF-8")).sorted.toSeq == Seq("k1", "k2"))
+    assert(rows.forall(r => !r.isNullAt(2) && r.getSeq[org.apache.spark.sql.Row](2).isEmpty))
+    val withTs = KafkaSinkFormat.fromColumns(df, "k", "v", Some("t"))
+    assert(withTs.schema == sinkSchemaNoTs.add(StructField("timestamp", TimestampType, nullable = true)))
   }
 
   test("fromRecords maps typed Records incl. event time and headers") {
